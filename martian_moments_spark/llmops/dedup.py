@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 from martian_moments_spark.llmops.textops import (
     HASH_P,
     portable_hash31,
-    scan_is_narrow,
     word_shingles,
 )
-from martian_moments_spark.operators.parallelize import spread_fanout
+from martian_moments_spark.operators.parallelize import narrow, spread
 
 # Deterministic MinHash family h_i(x) = (a_i * h(x) + b_i) mod P.
 # a_i odd and < 2^17 keeps a_i * h(x) < 2^48 — no BIGINT overflow.
@@ -111,8 +110,8 @@ def lsh_candidates(
     # builder and the a/b band branches each re-derive it; at gate
     # scale it ran as two ~0.7 s single-task stages (r11 profile).
     # Spread the narrow (id, text) projection first — identity at
-    # real scale, same contract as every spread_fanout site.
-    hashed = spread_fanout(
+    # real scale, same contract as every spread site.
+    hashed = spread(
         df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
         "doc_id",
         memo_key=memo_key,
@@ -157,7 +156,7 @@ def lsh_candidates(
     # rejected: it restores the distinct's map-side combine of
     # multi-band duplicate pairs but ADDS an exchange, and benched
     # 0.70-0.85x at gate scale across the family.)
-    if scan_is_narrow(df, memo_key=memo_key):
+    if narrow(df, memo_key=memo_key):
         pairs = pairs.repartition(
             df.sparkSession.sparkContext.defaultParallelism,
             F.col("id_a"),
@@ -275,23 +274,9 @@ def jaccard_pairs(
     )
 
 
-#: rolling-hash base of the Arrow deletion-signature kernel. Odd, so it
-#: is invertible mod 2^64 — deleting a character shifts every later
-#: position's weight DOWN one power of B, which the inverse undoes in
-#: O(1) from prefix hashes. The hash is a pure function of the variant
-#: string (H(v) = sum (cp[t]+1) * B^t mod 2^64, cp = codepoints; the +1
-#: keeps NUL from being weightless), so equal variants from different
-#: source strings always collide — the property recall depends on.
-_SIG_B = 1099511628211
-_SIG_BINV = pow(_SIG_B, -1, 1 << 64)
-
-
-def _deletion_sig_rows_jvm(base: DataFrame) -> DataFrame:
-    """(block, id, sig) signature rows via JVM expressions: explode the
-    materialized <=2-deletion variant strings, xxhash64 each. The
-    reference backend — every variant string is built with ~l
-    substr+concat work, so the stage costs O(l^3) character copies per
-    key where the Arrow kernel pays O(l^2) arithmetic."""
+def _deletion_sig_rows(base: DataFrame) -> DataFrame:
+    """(block, id, sig) signature rows: explode the materialized
+    <=2-deletion variant strings, xxhash64 each."""
     s = F.col("__s")
     l = F.length(s)
     d1 = F.transform(
@@ -325,123 +310,6 @@ def _deletion_sig_rows_jvm(base: DataFrame) -> DataFrame:
     return base.select("block", "id", F.explode(sigs).alias("sig")).select(
         "block", "id", F.xxhash64("sig").alias("sig")
     )
-
-
-def _deletion_sig_rows_arrow(base: DataFrame) -> DataFrame:
-    """(block, id, sig) signature rows via a vectorized Arrow kernel
-    (guide §4.2 "hand whole batches to vectorized native libraries").
-
-    The JVM form builds every <=2-deletion variant STRING only to hash
-    it away — O(l) character copies per variant, O(l^3) per key, and
-    that construction was the measured CPU floor of the edit-distance
-    pair (r11: 34.5 s task CPU at sf0.1 with no structural lever left
-    inside the expression form). A polynomial rolling hash removes the
-    strings entirely: with prefix hashes P[i] = sum_{t<i} (cp[t]+1)*B^t
-    (one cumsum per key), the hash of the variant that deletes
-    positions i<j is the O(1) identity
-
-        P[i] + (P[j] - P[i+1])*B^-1 + (P[l] - P[j+1])*B^-2   (mod 2^64)
-
-    — the deleted suffix weights shift down one/two powers of B. Equal
-    variant strings hash equal BY CONSTRUCTION (the hash is a function
-    of the variant, independent of which source string or deletion
-    pair produced it), so bucket collisions are a superset-safe
-    replacement for string equality: recall stays exactly 1 and the
-    banded verify rejects the (negligible, 2^-64-scale) extra hash
-    collisions. tests/test_properties.py pins candidate-set equality
-    against the JVM backend.
-
-    Batch mechanics: codepoint matrices are built per LENGTH GROUP
-    (one utf-32 decode per group — character semantics, so multi-byte
-    text deletes characters exactly like the JVM substr form), all
-    d1 hashes come from one (n, l) matrix identity, and the d2 loop is
-    l-1 vectorized row-blocks — python-level work is O(l) per length
-    group, not O(l^2) per key. Output order within a batch is
-    irrelevant (the rows feed a groupBy)."""
-    out_schema = ", ".join(
-        [
-            f"block {base.schema['block'].dataType.simpleString()}",
-            f"id {base.schema['id'].dataType.simpleString()}",
-            "sig bigint",
-        ]
-    )
-    B, BINV = _SIG_B, _SIG_BINV
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        binv = np.uint64(BINV)
-        binv2 = np.uint64((BINV * BINV) % (1 << 64))
-        # B^t table, grown on demand; computed in python-int space so
-        # no numpy scalar-overflow warnings fire.
-        bpow = np.array([pow(B, t, 1 << 64) for t in range(64)], dtype=np.uint64)
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            names = batch.schema.names
-            texts = batch.column(names.index("__s")).to_pylist()
-            lens = np.fromiter((len(t) for t in texts), dtype=np.int64, count=len(texts))
-            order = np.argsort(lens, kind="stable")
-            sig_parts: list = []
-            row_parts: list = []
-            pos = 0
-            while pos < len(order):
-                l = int(lens[order[pos]])
-                end = pos
-                while end < len(order) and lens[order[end]] == l:
-                    end += 1
-                idx = order[pos:end]
-                pos = end
-                if l == 0:
-                    sig_parts.append(np.zeros(len(idx), dtype=np.uint64))
-                    row_parts.append(idx)
-                    continue
-                if l >= len(bpow):
-                    bpow = np.array(
-                        [pow(B, t, 1 << 64) for t in range(l + 1)], dtype=np.uint64
-                    )
-                cps = (
-                    np.frombuffer(
-                        "".join(texts[i] for i in idx).encode("utf-32-le"),
-                        dtype=np.uint32,
-                    )
-                    .reshape(len(idx), l)
-                    .astype(np.uint64)
-                )
-                P = np.zeros((len(idx), l + 1), dtype=np.uint64)
-                np.cumsum((cps + np.uint64(1)) * bpow[:l], axis=1, out=P[:, 1:])
-                # each part is a (n, m) block raveled row-major, so its
-                # row ids are idx repeated m times
-                sig_parts.append(P[:, l])  # the string itself (m=1)
-                row_parts.append(idx)
-                # d1: delete position i, all i in one matrix identity
-                sig_parts.append(
-                    (P[:, 0:l] + (P[:, [l]] - P[:, 1 : l + 1]) * binv).ravel()
-                )
-                row_parts.append(np.repeat(idx, l))
-                # d2: delete i<j; one vectorized row-block per i
-                for i in range(l - 1):
-                    blockm = (
-                        P[:, [i]]
-                        + (P[:, i + 1 : l] - P[:, [i + 1]]) * binv
-                        + (P[:, [l]] - P[:, i + 2 : l + 1]) * binv2
-                    )
-                    sig_parts.append(blockm.ravel())
-                    row_parts.append(np.repeat(idx, l - 1 - i))
-            sigs = np.concatenate(sig_parts).view(np.int64)
-            rows = pa.array(np.concatenate(row_parts), type=pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(names.index("block")).take(rows),
-                    batch.column(names.index("id")).take(rows),
-                    pa.array(sigs, type=pa.int64()),
-                ],
-                names=["block", "id", "sig"],
-            )
-
-    return base.mapInArrow(gen, out_schema)
 
 
 def deletion_neighborhood_candidates(
@@ -481,9 +349,9 @@ def deletion_neighborhood_candidates(
     # The signature explode amplifies each row ~l^2/2 x, so its stage
     # cost is decoupled from its INPUT size — a small scan (one split)
     # would run the whole expansion on one core (measured 3.7 s serial
-    # vs 1.0 s spread at sf0.1, r11 profile). spread_fanout is the
-    # identity once the scan has >= defaultParallelism splits.
-    base = spread_fanout(
+    # vs 1.0 s spread at sf0.1, r11 profile). spread is the identity
+    # once the scan has >= defaultParallelism splits.
+    base = spread(
         df.filter(F.col(block_col).isNotNull() & F.col(text_col).isNotNull()).select(
             F.col(block_col).alias("block"),
             F.col(id_col).alias("id"),
@@ -494,35 +362,19 @@ def deletion_neighborhood_candidates(
     # Signature rows are (block, id, 64-bit hash of variant): bucketing
     # on a hash, not the variant string, keeps the shuffle key at 8
     # bytes, and a hash collision can only ADD a candidate (the
-    # banded-DP verify rejects it), so recall stays exactly 1 under
-    # EITHER signature backend.
+    # banded-DP verify rejects it), so recall stays exactly 1.
     #
-    # r12 measured BOTH backends (interleaved same-session A/B, both
-    # SFs) and the Arrow rolling-hash kernel is a WALL-CLOCK WASH:
-    # 0.97-0.99x at sf0.1, 0.99x at sf1. Stage profiles explain it —
-    # the kernel itself is ~3.5 ms/task (the O(1)-per-variant prefix-
-    # hash identity really does delete the substr+concat work: sig-
-    # stage JVM CPU 15.6 s -> 12.7 s) but the stage's remaining cost
-    # is the partial collect_set aggregate + 27 MB sig-row shuffle
-    # write, which both backends pay identically, and the Python
-    # boundary gives back the saved CPU as worker blocking (sig-stage
-    # run time 19.7 s -> 23.2 s). Default stays the JVM form (no plan-
-    # shape change, no Python workers); the kernel remains selectable
-    # for Arrow-friendly deployments and is parity-pinned by
-    # tests/test_r12_optimizations.py. A PassJoin-style partition-
-    # pattern canopy (fewer, shorter signatures) was ANALYZED and
-    # rejected on data shape: entity keys routinely share long constant
-    # prefixes (c_name: 9 identical leading chars corpus-wide), so the
-    # first fixed segment buckets the whole corpus into one all-pairs
-    # canopy — FastSS variants survive precisely because every variant
-    # spans the distinguishing characters.
-    if (
-        df.sparkSession.conf.get("martian.dedup.deletionSigKernel", "jvm")
-        == "arrow"
-    ):
-        sig_rows = _deletion_sig_rows_arrow(base)
-    else:
-        sig_rows = _deletion_sig_rows_jvm(base)
+    # Measured rejections, do not retry: an Arrow rolling-hash kernel
+    # that hashes each variant in O(1) from prefix hashes instead of
+    # building its string was a wall-clock wash (0.97-0.99x at sf0.1,
+    # 0.99x at sf1; it is in git history at commit ba0d9f5): the
+    # collect_set aggregate and sig-row shuffle it cannot touch
+    # dominate, and the Python boundary gives the saved CPU back as
+    # worker blocking. A PassJoin-style partition-pattern canopy fails
+    # on data shape: entity keys share long constant prefixes (c_name:
+    # 9 identical leading chars), so the first fixed segment buckets
+    # the whole corpus into one all-pairs canopy.
+    sig_rows = _deletion_sig_rows(base)
     # Pairs come from grouping each signature bucket, NOT from a
     # self-join: the join form evaluates the signature explosion once
     # per side and shuffles both copies (the union-of-two-selects
@@ -572,7 +424,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 50,
-    check_every: int = 2,
     frontier_sizes: list | None = None,
 ) -> DataFrame:
     """Transitive closure of a near-duplicate relation: label every
@@ -599,10 +450,9 @@ def connected_components(
     lineage so round N doesn't replan rounds 1..N-1; on a cluster use
     reliable checkpointing to survive executor loss. Convergence
     (empty frontier) falls out of the update itself — the driver-side
-    count inspects the frontier it just built, every ``check_every``
-    rounds; idempotent extra rounds past the fixpoint are no-ops.
-    Pass ``frontier_sizes=[]`` to record the exact per-round frontier
-    size (checked every round in that mode) — the property suite pins
+    count inspects the frontier it just built after every round.
+    Pass ``frontier_sizes=[]`` to record the exact per-hop frontier
+    size (single-hop rounds in that mode) — the property suite pins
     frontier-collapse dynamics on it.
     """
     # Symmetrize with ONE pass over the edge set: a union of two
@@ -665,18 +515,14 @@ def connected_components(
     # are the next frontier, and an empty one means hop 1's labels
     # provoked no improvement anywhere, i.e. the exact fixpoint the
     # single-hop rule reaches (tests/test_r12_optimizations.py pins
-    # label equality against the single-hop loop). The hop-1 subtree
+    # label equality against the instrumented loop). The hop-1 subtree
     # appears under both hop-2 branches; its label/message exchanges
     # are identical subtrees, which IS the ReuseExchange case (one
     # evaluation, two readers — see parallelize.py's tombstone for the
     # negative case), verified in the captured plan. The instrumented
     # mode keeps single hops: its contract is the exact per-hop
     # frontier trajectory.
-    fuse = (
-        frontier_sizes is None
-        and vertices.sparkSession.conf.get("martian.dedup.ccTwoHop", "true")
-        == "true"
-    )
+    fuse = frontier_sizes is None
     rnd = 0
     while rnd < max_iter:
         if fuse and rnd + 1 < max_iter:
@@ -714,10 +560,8 @@ def connected_components(
             frontier_sizes.append(size)
             if size == 0:
                 break
-        elif fuse or rnd % check_every == 0 or rnd >= max_iter:
-            # a fused round already spans check_every=2 hops
-            if frontier.limit(1).count() == 0:
-                break
+        elif frontier.limit(1).count() == 0:
+            break
     return labels.select(F.col("v").alias(id_col), F.col("label").alias("component_id"))
 
 
@@ -763,7 +607,7 @@ def char_span_islands(
     >= 2, exact on the gram string) -> merge_hit_islands. Returns
     (doc_id, s, len, na, e); the shared candidate stage behind
     repeated_char_spans / strip_repeated_spans. ``spread`` is passed
-    through to char_anchor_grams (see scan_is_narrow)."""
+    through to char_anchor_grams (see parallelize.narrow)."""
     from martian_moments_spark.llmops.textops import (
         CHAR_ANCHOR_K,
         CHAR_ANCHOR_SEL,
@@ -1056,7 +900,7 @@ def exact_substring_shared(shard: DataFrame, min_shared: int = SA_MIN_SHARED) ->
     # One explicit repartition of the narrow (doc_id, i, pdoc, pi)
     # pairs spreads that CPU over the session's cores; the downstream
     # per-doc MAX re-aggregates under its own key, so placement is
-    # free. This is not spread_fanout's at-scale-identity case — the
+    # free. This is not spread's at-scale-identity case — the
     # window's single partition is structural — so repartition
     # unconditionally.
     adj = adj.repartition(

@@ -126,9 +126,9 @@ def dsir_weights(docs: DataFrame, memo_key: str | None = None) -> DataFrame:
     single-task stages); the docs are spread once first so every
     branch reads the shared spread exchange at full parallelism —
     the bigram_lm_scores pattern. Identity at real scale."""
-    from martian_moments_spark.operators.parallelize import spread_fanout
+    from martian_moments_spark.operators.parallelize import spread
 
-    toks = spread_fanout(docs, "doc_id", memo_key=memo_key).select(
+    toks = spread(docs, "doc_id", memo_key=memo_key).select(
         "doc_id", tokens("text").alias("t")
     ).withColumn("is_ref", lm_gate(F.col("t")))
     feats = _doc_feature_rows(toks)

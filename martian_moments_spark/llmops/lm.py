@@ -60,7 +60,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from martian_moments_spark.llmops.textops import tokens
-from martian_moments_spark.operators.parallelize import spread_fanout
+from martian_moments_spark.operators.parallelize import spread
 
 #: the repo's standard heuristic quality gate (source_mix_report):
 #: docs passing it form the LM's reference (training) slice.
@@ -125,11 +125,11 @@ def bigram_lm_scores(docs: DataFrame, ppl_max: int = BIGRAM_PPL_MAX) -> DataFram
     # the one-split scan — serial single-task stages at bench scale
     # (r11 profile: 0.62 + 0.53 + 0.46 s). One keyed repartition of the
     # raw docs runs every branch's tokenize/explode at full
-    # parallelism; identity at real scale (spread_fanout), where the
+    # parallelism; identity at real scale (spread), where the
     # scan itself has enough splits. (The former 4th consumer — a
     # doc-id spine left-joined back — was removed by the explode_outer
     # rewrite below.)
-    toks = spread_fanout(docs, "doc_id").select(
+    toks = spread(docs, "doc_id").select(
         "doc_id", tokens("text").alias("t")
     )
     ref = toks.filter(lm_gate(F.col("t")))

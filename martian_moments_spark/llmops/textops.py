@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from martian_moments_spark.operators.parallelize import narrow
+
 # Mersenne prime 2^31-1: modulus for all hash arithmetic. Keeps every
 # intermediate < 2^36 so BIGINT arithmetic never overflows in either
 # engine (DuckDB errors on BIGINT overflow rather than wrapping).
@@ -299,37 +301,6 @@ CHAR_ANCHOR_SEL = 4  # keep grams with hash % SEL == 0 (density 1/4)
 SPAN_PACK = 1 << 31
 
 
-_NARROW_SCAN_MEMO: dict = {}
-
-
-def scan_is_narrow(docs: DataFrame, memo_key: str | None = None) -> bool:
-    """Whether ``docs`` arrives in fewer partitions than the session's
-    default parallelism — i.e. an amplifying per-position text op
-    (k-fold byte expansion per gram) would serialize on too few tasks
-    and should spread the input first. Session conf
-    ``martian.textops.anchorSpread`` pins the answer (``always`` /
-    ``never``) so cluster operators get environment-independent,
-    audit-reproducible plans; the default ``auto`` probes the physical
-    partitioning ONCE per ``memo_key`` per process. The probe forces
-    physical planning of ``docs``, which is exactly why it lives here
-    — outside the plan builders — and is memoized per dataset instead
-    of being re-paid on every query build."""
-    mode = docs.sparkSession.conf.get("martian.textops.anchorSpread", "auto")
-    if mode == "always":
-        return True
-    if mode == "never":
-        return False
-    if memo_key is not None and memo_key in _NARROW_SCAN_MEMO:
-        return _NARROW_SCAN_MEMO[memo_key]
-    narrow = (
-        docs.rdd.getNumPartitions()
-        < docs.sparkSession.sparkContext.defaultParallelism
-    )
-    if memo_key is not None:
-        _NARROW_SCAN_MEMO[memo_key] = narrow
-    return narrow
-
-
 def char_anchor_grams(
     docs: DataFrame,
     k: int = CHAR_ANCHOR_K,
@@ -356,12 +327,12 @@ def char_anchor_grams(
     skipped at real scale, where the scan already carries more
     partitions than cores (measured: 2.8 s -> 0.4 s for the anchor
     stage at sf0.1, which arrives as one 1.5 MB parquet task).
-    Callers decide ``spread`` via scan_is_narrow(docs, memo_key=...)
+    Callers decide ``spread`` via parallelize.narrow(docs, memo_key=...)
     so the physical-planning probe happens once per dataset, not
     inside this plan builder (ADVICE r07); ``spread=None`` falls back
     to an un-memoized probe for ad-hoc library use."""
     if spread is None:
-        spread = scan_is_narrow(docs)
+        spread = narrow(docs)
     if spread:
         docs = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     t = F.col("text")

@@ -1,38 +1,24 @@
-"""Scan-parallelism repair for fan-out stages (optimization guide
-§2.4 "remove shuffles outright" has a dual: ADD the one cheap shuffle
-that unserializes a stage).
+"""The one scan-parallelism operator.
 
-Spark sizes scan partitions by INPUT bytes (``maxPartitionBytes`` /
-``openCostInBytes``), which is right when downstream per-byte cost is
-O(1). A fan-out stage — an explode of O(len^2) signature variants, an
-Arrow-batched decode, a per-row neighborhood expansion — multiplies
-each input byte by orders of magnitude, so a kilobyte-scale scan (one
-split, one task) serializes the whole stage's CPU on a single core
-while the rest of the cluster idles. Measured on the FastSS signature
-stage at sf0.1: 3.7 s serial vs 1.0 s after hash-repartitioning onto
-the session's cores (r11 profile, stage `edit_distance_*` #1).
+Spark sizes scan partitions by input bytes, so a kilobyte-scale scan
+runs as one task and serializes whatever CPU follows it on one core.
+``spread`` hash-repartitions such a scan-shaped input onto more
+partitions when, and only when, it arrives in fewer than the target;
+``narrow`` answers the same question for callers that place their own
+repartition. At real scale the scan already has more splits than
+cores, so both are the identity there.
 
-``spread_fanout`` hash-repartitions the (narrow — call it BEFORE the
-fan-out, while rows are still small) input onto the session's default
-parallelism when, and only when, the input's own partition count is
-below it. At real scale a corpus scan already has more splits than
-cores, so the call is the identity and no extra shuffle is paid where
-the scan itself provides the parallelism — the knob is scale-adaptive
-by construction, not tuned to local core counts.
+Two targets:
 
-``spread_scan`` (for ~O(1)-amplification relational scan work) further
-BYTE-CAPS the spread target (r11 VERDICT: five spread queries ran
-faster at 8 cores than 32 at gate-scale byte sizes — scheduling plus
-the exchange outgrow the serial CPU recovered once partitions shrink
-toward kilobytes). The target is
-``min(defaultParallelism, ceil(est_bytes / bytesPerSlot))`` where
-``est_bytes`` is Catalyst's own logical-plan size estimate of the
-narrow projection, so the partition count tracks the INPUT (guide §2.2
-"fewer, larger partitions"), not the core count. ``spread_fanout``
-stays uncapped: its call sites amplify CPU per input byte by 30-200x
-(deletion variants, per-bit majority votes, codec decodes), so input
-bytes deliberately under-state the work — the measured 2.8-5.9x wins
-at full parallelism are the evidence (r11 scoreboard).
+- uncapped, ``defaultParallelism``: fan-out stages (deletion
+  variants, per-bit majority votes, codec decodes) amplify CPU per
+  input byte 30-200x, so input bytes under-state their work;
+- ``byte_cap=True``, ``min(para, max(min(8, para), ceil(est / 1 MiB)))``
+  with ``est`` Catalyst's size estimate: for ~O(1)-per-byte relational
+  scan work a full-parallelism spread of a small input pays more in
+  task scheduling and the exchange than it recovers (five such queries
+  ran faster at 8 cores than 32). Below 8 slots the exchange never
+  amortizes.
 """
 
 from __future__ import annotations
@@ -42,13 +28,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Default byte-cap denominator for spread_scan: one slot per MiB of
-#: (Catalyst-estimated) input. Local gate-scale default; a cluster
-#: pins ``martian.parallelize.bytesPerSlot`` (0 disables the cap) the
-#: same way it pins ``martian.parallelize.spreadScan``. At real scale
-#: the cap is moot: the scan has >= cores splits and spread_scan is
-#: the identity before the cap is consulted.
+from martian_moments_spark.catalog import fingerprint
+
 _BYTES_PER_SLOT = 1 << 20
+_MIN_SLOTS = 8
 
 
 def _est_bytes(df: DataFrame) -> int:
@@ -61,47 +44,28 @@ def _est_bytes(df: DataFrame) -> int:
     return size if isinstance(size, int) else int(size.toString())
 
 
-def _fingerprint(memo_key: str):
-    """Best-effort staleness guard for the probe memo (ADVICE r11):
-    memo keys are ``<sf_dir>:<table>`` by convention, so the table's
-    parquet path can be stat'ed; if the files are rewritten in-process
-    (tests regenerating data at the same path) the mtime changes and
-    the memo entry is naturally invalidated. Unknown paths fingerprint
-    as None — memoized once per session, exactly the old behavior."""
-    sf_dir, _, table = memo_key.rpartition(":")
-    if not sf_dir or not table:
-        return None
-    path = os.path.join(sf_dir, table + ".parquet")
-    try:
-        return os.stat(path).st_mtime_ns
-    except OSError:
-        return None
-
-
-#: probe memo: (memo_key, fingerprint, parallelism, columns) ->
+#: probe memo: (memo_key, dataset fingerprint, parallelism, columns) ->
 #: (scan partition count, Catalyst size estimate). The split count of
 #: a table's scan depends only on its files; the size estimate also
-#: depends on the projection, hence the column tuple in the key — one
-#: probe per (dataset, projection, session parallelism) serves every
-#: query build over that shape.
+#: depends on the projection, hence the column tuple in the key.
 _PROBE_MEMO: dict = {}
 
 
 def reset_probe_memo() -> None:
-    """Drop all memoized scan probes (test harnesses that rewrite
-    datasets in place without changing file mtimes call this)."""
+    """Drop all memoized scan probes."""
     _PROBE_MEMO.clear()
 
 
 def _probe(df: DataFrame, memo_key: str | None, parallelism: int) -> tuple[int, int]:
-    """(partition count, estimated bytes) for ``df``, memoized when a
-    ``memo_key`` names the dataset. Both probes touch the JVM planner
-    (physical planning for the partition count, logical stats for the
-    size), so plan builders that run per query build must not pay them
-    twice — thread a memo_key wherever the input is scan-shaped."""
+    """(partition count, estimated bytes) for ``df``. Both touch the
+    JVM planner, so plan builders pass ``memo_key="<sf_dir>:<table>"``
+    to pay them once per dataset and projection; the table's files
+    are fingerprinted so an in-place rewrite re-probes."""
     if memo_key is None:
         return df.rdd.getNumPartitions(), _est_bytes(df)
-    key = (memo_key, _fingerprint(memo_key), parallelism, tuple(df.columns))
+    sf_dir, _, table = memo_key.rpartition(":")
+    fp = fingerprint(os.path.join(sf_dir, table + ".parquet")) if sf_dir else None
+    key = (memo_key, fp, parallelism, tuple(df.columns))
     ent = _PROBE_MEMO.get(key)
     if ent is None:
         ent = (df.rdd.getNumPartitions(), _est_bytes(df))
@@ -109,118 +73,39 @@ def _probe(df: DataFrame, memo_key: str | None, parallelism: int) -> tuple[int, 
     return ent
 
 
-def spread_fanout(
-    df: DataFrame, key_col: str, *more_cols: str, memo_key: str | None = None
+def narrow(df: DataFrame, memo_key: str | None = None) -> bool:
+    """Whether ``df`` arrives in fewer partitions than the session's
+    default parallelism."""
+    para = df.sparkSession.sparkContext.defaultParallelism
+    return _probe(df, memo_key, para)[0] < para
+
+
+def spread(
+    df: DataFrame, *keys: str, memo_key: str | None = None, byte_cap: bool = False
 ) -> DataFrame:
-    """Ensure ``df`` is spread over the session's parallelism before a
-    high-amplification (explode / Arrow-UDF) stage.
+    """Hash-repartition ``df`` on ``keys`` onto the target partition
+    count (see the module docstring) unless it already has at least
+    that many partitions.
 
-    - Partitioning key is a real column (deterministic under task
-      retry — guide §2.5 forbids rand()-derived keys), so re-run map
-      tasks reproduce the same row placement.
-    - The partition count is passed EXPLICITLY: a bare
-      ``repartition(col)`` is AQE-coalescible, and AQE would fold a
-      kilobyte-scale shuffle straight back into one task, undoing the
-      repair. REPARTITION_BY_NUM is exempt from coalescing.
-    - Identity when the input already has >= defaultParallelism
-      partitions (the at-scale case), so this never ADDS a shuffle of
-      a large input.
-    - NOT byte-capped (unlike spread_scan): fan-out stages amplify
-      CPU per input byte 30-200x, so sizing the spread by input bytes
-      would re-serialize exactly the stages this exists to repair
-      (simhash 5.88x, FastSS 2.8-3.3x, jpeg decode 3.55x at full
-      parallelism — r11 interleaved A/B).
-
-    Call it on a scan-shaped input (scan + filter + narrow project):
-    ``df.rdd.getNumPartitions()`` builds the physical plan to count
-    partitions, which is cheap there and would not be on a plan that
-    already contains joins. Library operators invoked once per query
-    build (lsh_candidates, dsir_weights) pass ``memo_key`` so the
-    probe is paid once per dataset, not once per build (ADVICE r11).
-
-    Pass extra columns when the single natural key is too low-
-    cardinality to spread evenly (guide §2.5: use far more distinct
-    key values than partitions); the hash covers the tuple.
+    - Call it on a scan-shaped input (scan + filter + narrow project)
+      BEFORE the expensive stage: the probe plans ``df`` physically,
+      which is cheap there and would not be after joins.
+    - The keys are real columns, so retried map tasks reproduce the
+      same row placement. Add columns when the natural key has too
+      few distinct values to spread evenly; where a downstream
+      groupBy/join keys on the same columns, it reuses the spread's
+      exchange instead of adding one.
+    - The partition count is explicit: a bare ``repartition(col)`` is
+      AQE-coalescible and would be folded back into one task.
     """
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if memo_key is None:
-        nparts = df.rdd.getNumPartitions()
-    else:
-        key = (memo_key, _fingerprint(memo_key), target, tuple(df.columns))
-        nparts = _PROBE_MEMO.get(key)
-        if nparts is None:
-            nparts = df.rdd.getNumPartitions()
-            _PROBE_MEMO[key] = nparts
+    para = df.sparkSession.sparkContext.defaultParallelism
+    nparts, est = _probe(df, memo_key, para)
+    target = para
+    if byte_cap:
+        target = min(para, max(min(_MIN_SLOTS, para), -(-est // _BYTES_PER_SLOT)))
     if nparts >= target:
         return df
-    return df.repartition(target, *[F.col(c) for c in (key_col, *more_cols)])
-
-
-def spread_scan(
-    df: DataFrame, memo_key: str, key_col: str, *more_cols: str
-) -> DataFrame:
-    """spread_fanout for FACT-TABLE scans (~O(1) CPU per input byte:
-    partial aggregation, expression evaluation, broadcast probing),
-    with the probe memoized per dataset and the spread target
-    BYTE-CAPPED.
-
-    Motivation (r11 profile): at bench scale a single-row-group
-    parquet file yields ONE effective scan task, so scan-side work
-    serializes on one core while 31 idle. Repartitioning the narrow
-    post-scan projection onto more cores unserializes it for the cost
-    of one small shuffle. But the r11 driver bench showed the
-    ``defaultParallelism`` target OVERSHOOTS at gate-scale byte sizes
-    (validation_gaps 0.79x round-over-round and gate-flagged; five
-    spread queries faster at 8 cores than 32): kilobyte post-spread
-    partitions pay more in task scheduling + the exchange than the
-    recovered serial CPU. The target is therefore sized by the input,
-    ``min(defaultParallelism, ceil(est_bytes / bytesPerSlot))`` —
-    partitions track bytes (guide §2.2), parallelism is the ceiling,
-    not the goal. At real scale the scan carries >= cores splits and
-    this is the identity — same scale-adaptive contract as
-    spread_fanout.
-
-    Pick ``key_col`` (+ ``more_cols``) as the FIRST downstream
-    shuffle key where one exists: ``repartition(N, key)`` establishes
-    hashpartitioning(key, N), which a following groupBy/join on the
-    same key reuses (guide §2.4 "two operations keyed the same way
-    can share one exchange"), so the spread replaces — not adds — an
-    exchange in those plans.
-
-    Session confs (all pinnable for cluster operators, mirroring
-    ``martian.textops.anchorSpread``):
-    - ``martian.parallelize.spreadScan``: ``always`` / ``never`` /
-      default ``auto``.
-    - ``martian.parallelize.bytesPerSlot``: bytes of estimated input
-      per spread slot (default 1 MiB; ``0`` disables the cap and
-      restores the raw-parallelism target).
-    - ``martian.parallelize.minSlots``: floor of the capped target
-      (default 8) — below it the exchange + per-task scheduling never
-      amortize at all (the VERDICT formula's ``floor`` term), and the
-      r11 driver-confirmed wins at this floor's scale (pricing 1.40x,
-      json_path 1.32x) are preserved while the core-count overshoot
-      (32 slots over kilobyte partitions) is what the cap removes.
-    """
-    spark = df.sparkSession
-    mode = spark.conf.get("martian.parallelize.spreadScan", "auto")
-    if mode == "never":
-        return df
-    para = spark.sparkContext.defaultParallelism
-    bps = int(spark.conf.get("martian.parallelize.bytesPerSlot", str(_BYTES_PER_SLOT)))
-    if mode == "always" and bps == 0:
-        return df.repartition(para, *[F.col(c) for c in (key_col, *more_cols)])
-    nparts, est = _probe(df, memo_key, para)
-    if bps == 0:
-        target = para
-    else:
-        floor = min(
-            int(spark.conf.get("martian.parallelize.minSlots", "8")), para
-        )
-        target = min(para, max(floor, -(-est // bps)))
-    if mode != "always" and nparts >= target:
-        return df
-    return df.repartition(target, *[F.col(c) for c in (key_col, *more_cols)])
+    return df.repartition(target, *[F.col(c) for c in keys])
 
 
 # An r11 draft also carried ``repartition_for_key`` (pre-materialize
@@ -231,5 +116,5 @@ def spread_scan(
 # when the consumer is a broadcast join the keyed exchange serves no
 # one at all (cross_doc_ngram_spans benched 1.80 s with it vs 1.20 s
 # without, same session, interleaved). Exchange sharing that actually
-# fires comes from IDENTICAL subtrees (this module's spread_fanout
-# qualifies: both consumers read the same spread shuffle files).
+# fires comes from IDENTICAL subtrees (this module's spread qualifies:
+# both consumers read the same spread shuffle files).

@@ -28,12 +28,12 @@ from martian_moments_spark.llmops.similarity import (
 from martian_moments_spark.llmops.textops import (
     portable_hash31,
     quality_metrics_packed,
-    scan_is_narrow,
     sql_portable_hash31,
     sql_quality_metrics,
     sql_tokens,
     tokens,
 )
+from martian_moments_spark.operators.parallelize import narrow
 from martian_moments_spark.plans.registry import register
 
 NEARDUP_TAU = 0.30  # cosine threshold for embedding near-dup (synthetic corpus scale)
@@ -342,9 +342,9 @@ def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-located. Revenue is a fixed-point sum, so the top-10 cut is
     deterministic (ties broken by order key).
 
-    r11 measured rejection (do not retry): spread_scan on the filtered
-    orders probe benched 0.91x / 0.79x (interleaved A/B, both arm
-    orders) — the group keys (l_orderkey, o_orderdate, o_orderpriority)
+    r11 measured rejection (do not retry): a byte-capped spread on the
+    filtered orders probe benched 0.91x / 0.79x (interleaved A/B, both
+    arm orders) — the group keys (l_orderkey, o_orderdate, o_orderpriority)
     differ from the spread key so the repartition replaces nothing,
     and the broadcast probes are too cheap to amortize the added
     exchange (same shape as the daily_activity / tpch_q10 rejections).
@@ -2451,13 +2451,13 @@ def weighted_median_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both interleaved arm orders at sf0.1, and 0.84x with phase-1
     checkpointed to kill its double evaluation; the 3-task sort is not
     this query's wall, while the extra exchange + metadata branch +
-    broadcast join are real costs (runs in tools_r12_ab.py `wm`;
-    tests/test_r12_optimizations.py pinned the equivalence while the
-    draft lived). The at-scale exposure is also BOUNDED, not open:
-    the window partition is distinct PRICE UNITS per flag, capped by
-    the ~10.4M-value price domain at ANY corpus size, so the hot
-    partition tops out near 10M rows per flag — a big sort task, not
-    a corpus-sized one.
+    broadcast join are real costs (runs in tools_r12_ab.py `wm` at
+    commit ba0d9f5; tests/test_r12_optimizations.py pinned the
+    equivalence while the draft lived). The at-scale exposure is also
+    BOUNDED, not open: the window partition is distinct PRICE UNITS per
+    flag, capped by the ~10.4M-value price domain at ANY corpus size,
+    so the hot partition tops out near 10M rows per flag — a big sort
+    task, not a corpus-sized one.
 
     Scale: values pre-aggregate per (group, price) — the cardinality
     cap that makes the running window safe (its partition is distinct
@@ -2853,13 +2853,13 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned hashpartitioning), it adds none, and REPARTITION_BY_NUM
     # is exempt from AQE coalescing. Identity at real scale, where
     # the exchanges are byte-sized by AQE.
-    narrow = scan_is_narrow(li, memo_key=sf_dir + ":lineitem")
+    pin = narrow(li, memo_key=sf_dir + ":lineitem")
     target = spark.sparkContext.defaultParallelism
-    osp = oriented.repartition(target, F.col("src")) if narrow else oriented
+    osp = oriented.repartition(target, F.col("src")) if pin else oriented
     half = osp.join(
         adj.select(F.col("v").alias("src"), F.col("nbrs").alias("nbrs_u")), "src"
     )
-    if narrow:
+    if pin:
         half = half.repartition(target, F.col("dst"))
     edged = half.join(
         adj.select(F.col("v").alias("dst"), F.col("nbrs").alias("nbrs_v")), "dst"

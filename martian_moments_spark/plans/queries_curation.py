@@ -209,12 +209,12 @@ def contamination_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline (bench shingles are the bounded side), split assignment
     is per-row hash math, and the final rollup shuffles a dozen keys.
     """
-    from martian_moments_spark.operators.parallelize import spread_fanout
+    from martian_moments_spark.operators.parallelize import spread
 
     # shingle explode + final tokenize both ride the one-split scan at
     # gate scale (r11 profile: 0.51 s single-task stage); spread first
     # — identity at real scale.
-    docs = spread_fanout(
+    docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "lang", "text"), "doc_id"
     )
     is_bench = F.col("doc_id") % DECONTAM_BENCH_MOD == 0

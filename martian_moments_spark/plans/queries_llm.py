@@ -61,7 +61,6 @@ from martian_moments_spark.llmops.textops import (
     CHAR_ANCHOR_K,
     SPAN_PACK,
     char_anchor_grams,
-    scan_is_narrow,
     portable_hash31,
     sql_char_anchor_cte,
     predicted_language,
@@ -73,7 +72,7 @@ from martian_moments_spark.llmops.textops import (
     sql_portable_hash31,
     sql_quality_metrics,
 )
-from martian_moments_spark.operators.parallelize import spread_fanout
+from martian_moments_spark.operators.parallelize import narrow, spread
 from martian_moments_spark.plans.registry import register
 
 # Shared DuckDB CTE fragments (kept in lockstep with llmops helpers).
@@ -187,7 +186,7 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # md5-per-shingle signatures are the per-row CPU: spread the
     # narrow doc projection first (identity at real scale; r11).
-    hashed = spread_fanout(docs, "doc_id").withColumn(
+    hashed = spread(docs, "doc_id").withColumn(
         "__sh", F.transform(word_shingles("text"), portable_hash31)
     )
     return hashed.select("doc_id", *minhash_from_hashes(F.col("__sh")))
@@ -267,7 +266,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE task at sf0.1), so the scan is spread first; identity at real
     scale."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return spread_fanout(docs, "doc_id").select(
+    return spread(docs, "doc_id").select(
         "doc_id", simhash("text").alias("simhash32")
     )
 
@@ -1282,7 +1281,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the narrow doc rows first — identity at real scale, where the
     # scan partitioning itself carries the parallelism and payload
     # bytes never ride a shuffle.
-    docs = spread_fanout(
+    docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     return png_features(encode_png(docs))
@@ -1349,7 +1348,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow task at gate scale (r11 profile: 4.1 s single-task);
     # spread the narrow doc rows first — identity at real scale (see
     # multimodal_png_decode).
-    docs = spread_fanout(
+    docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     return jpeg_features(encode_jpeg(docs))
@@ -1464,7 +1463,7 @@ def decontamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shingle-hash explode is derived twice (bench set + corpus
     # side) from the one-split scan at gate scale (r11 profile:
     # 0.56 s single-task stage); spread first — identity at real scale.
-    docs = spread_fanout(
+    docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
     is_bench = F.col("doc_id") % DECONTAM_BENCH_MOD == 0
@@ -1966,7 +1965,7 @@ def curation_to_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile: 0.68 + 0.47 + 0.25 + 0.09 s one-task stages). One
     # keyed repartition parallelizes the text fan-out work and lets
     # ReuseExchange share the scan across all branches.
-    docs = spread_fanout(raw_docs, "doc_id")
+    docs = spread(raw_docs, "doc_id")
     # r11: explode(array(struct(...))) Generate barrier — predicate
     # pushdown used to substitute the packed quality expression into
     # the gate filter below the projection (scored ~2x per row; the
@@ -3745,7 +3744,7 @@ def window_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from this posexplode; at gate scale it ran in the scan's one
     # split (r11 profile: 0.77 s single-task stage). Spread the narrow
     # doc projection before the fan-out; identity at real scale.
-    pos = spread_fanout(
+    pos = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     ).select(
         "doc_id", F.posexplode(tokens("text")).alias("p0", "tok")
@@ -4085,7 +4084,7 @@ def cross_doc_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hit join broadcasts `dup`, so a shingle-keyed exchange of the
     # full pos relation serves no consumer — measured pure overhead.
     pos = (
-        spread_fanout(docs, "doc_id")
+        spread(docs, "doc_id")
         .select("doc_id", F.posexplode(sh_arr).alias("p0", "sh"))
         .select("doc_id", (F.col("p0") + 1).alias("p"), "sh")
     )
@@ -4262,7 +4261,7 @@ def repeated_char_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — no pair expansion anywhere.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    sp = scan_is_narrow(docs, memo_key=sf_dir + ":documents")
+    sp = narrow(docs, memo_key=sf_dir + ":documents")
     return char_span_stats(docs, tau=CHAR_SPAN_TAU, spread=sp)
 
 
@@ -4304,7 +4303,7 @@ def repeated_span_extracts(spark: SparkSession, sf_dir: str) -> DataFrame:
     texts are cut for 50 rows, never per-doc.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    sp = scan_is_narrow(docs, memo_key=sf_dir + ":documents")
+    sp = narrow(docs, memo_key=sf_dir + ":documents")
     top = (
         char_span_stats(docs, tau=CHAR_SPAN_TAU, spread=sp)
         .filter(F.col("longest_len") > 0)
@@ -4383,7 +4382,7 @@ def strip_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — per-doc text travels through ONE join, not per anchor.
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    sp = scan_is_narrow(docs, memo_key=sf_dir + ":documents")
+    sp = narrow(docs, memo_key=sf_dir + ":documents")
     return strip_islands_text(docs, char_span_islands(docs, spread=sp))
 
 
@@ -4448,7 +4447,7 @@ def char_level_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         once_key=sf_dir,
     )
     anch = char_anchor_grams(
-        docs, spread=scan_is_narrow(docs, memo_key=sf_dir + ":documents")
+        docs, spread=narrow(docs, memo_key=sf_dir + ":documents")
     )
     bench_g = anch.filter(is_bench).select("g").distinct()
     hits = (
@@ -4525,7 +4524,7 @@ def repeated_boilerplate_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     anch = char_anchor_grams(
-        docs, spread=scan_is_narrow(docs, memo_key=sf_dir + ":documents")
+        docs, spread=narrow(docs, memo_key=sf_dir + ":documents")
     )
     cat = (
         anch.groupBy("g")
@@ -5156,7 +5155,7 @@ def minhash_estimation_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # md5-per-shingle signatures are the per-row CPU: spread the
     # narrow doc projection first (identity at real scale; r11).
-    hashed = spread_fanout(docs, "doc_id").withColumn(
+    hashed = spread(docs, "doc_id").withColumn(
         "__sh", F.transform(word_shingles("text"), portable_hash31)
     )
     # sig/hs are consumed by both join sides; recomputing them is
@@ -5457,7 +5456,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     # md5-per-shingle signatures are the per-row CPU: spread the
     # narrow doc projection first (identity at real scale; r11).
-    hashed = spread_fanout(docs, "doc_id").withColumn(
+    hashed = spread(docs, "doc_id").withColumn(
         "__sh", F.transform(word_shingles("text"), portable_hash31)
     )
     # Recompute hs per join side on purpose: a localCheckpoint here
@@ -5993,7 +5992,7 @@ def retrieval_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize feeds the probe join and the posting explode from the
     # one-split scan at gate scale (r11 profile: 0.69 s single-task
     # stage); spread first — identity at real scale.
-    docs = spread_fanout(
+    docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "source", "text"),
         "doc_id",
     )

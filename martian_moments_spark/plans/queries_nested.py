@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from martian_moments_spark.catalog import load
-from martian_moments_spark.operators.parallelize import spread_scan
+from martian_moments_spark.operators.parallelize import spread
 from martian_moments_spark.plans.registry import register
 
 
@@ -43,10 +43,11 @@ def json_path_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     `photo.value:rover.id::int` pattern (flat_photo_response.sql:10-21,
     parse via N1 at :26) on the events.props JSON column. from_json
     with an explicit schema keeps the parse JVM-side and vectorized."""
-    events = spread_scan(
+    events = spread(
         load(spark, sf_dir, "events").select("event_id", "event_type", "props"),
-        sf_dir + ":events",
         "event_id",
+        memo_key=sf_dir + ":events",
+        byte_cap=True,
     )
     schema = StructType([StructField("k", IntegerType())])
     parsed = F.from_json(F.col("props"), schema)

@@ -12,7 +12,7 @@ from pyspark.sql.window import Window as W
 from martian_moments_spark.catalog import load
 from martian_moments_spark.functions.numeric import fixed_sum
 from martian_moments_spark.operators.relational import asof_join, bucketed_range_join
-from martian_moments_spark.operators.parallelize import spread_scan
+from martian_moments_spark.operators.parallelize import spread
 from martian_moments_spark.plans.registry import register
 
 
@@ -199,14 +199,15 @@ def travel_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r11: the whole probe pipeline (two broadcast probes + the
     interval boolean + partial aggregation) runs in the lineitem scan
-    task, and the gate-scale scan has 1-3 splits; spread_scan on the
-    narrow (l_orderkey, l_shipdate) projection unserializes it
+    task, and the gate-scale scan has 1-3 splits; a byte-capped spread
+    of the narrow (l_orderkey, l_shipdate) projection unserializes it
     (interleaved A/B: 1.10x / 1.14x in both arm orders). Identity at
     real scale (guide §2.4 dual)."""
-    li = spread_scan(
+    li = spread(
         load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate"),
-        sf_dir + ":lineitem",
         "l_orderkey",
+        memo_key=sf_dir + ":lineitem",
+        byte_cap=True,
     )
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_name")

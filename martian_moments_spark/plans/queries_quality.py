@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from martian_moments_spark.catalog import load
-from martian_moments_spark.llmops.textops import scan_is_narrow
+from martian_moments_spark.operators.parallelize import narrow
 from martian_moments_spark.plans.registry import register
 
 
@@ -149,7 +149,7 @@ def ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     # behind them (r11 profile: 8.3 s task runtime, 0.4 s JVM CPU).
     # Pin the exchange the groupBy needs anyway at the session's
     # parallelism — replaces it, adds nothing; identity at real scale.
-    if scan_is_narrow(events, memo_key=sf_dir + ":events"):
+    if narrow(events, memo_key=sf_dir + ":events"):
         events = events.repartition(
             events.sparkSession.sparkContext.defaultParallelism, F.col("user_id")
         )
@@ -254,16 +254,17 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (int/string columns only — float rendering differs per engine)."""
     from pyspark.sql import functions as F
 
-    from martian_moments_spark.operators.parallelize import spread_scan
+    from martian_moments_spark.operators.parallelize import spread
 
     # The Expand-based multi-countDistinct partial aggregate is the
     # query's CPU and ran in the scan's ONE split at gate scale (r11
     # profile: 1.1 s single-task stage); spread the narrow projection
     # first — identity at real scale.
-    orders = spread_scan(
+    orders = spread(
         load(spark, sf_dir, "orders").select(*PROFILE_COLS),
-        sf_dir + ":orders",
         "o_orderkey",
+        memo_key=sf_dir + ":orders",
+        byte_cap=True,
     )
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for c in PROFILE_COLS:

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from martian_moments_spark.catalog import load
-from martian_moments_spark.operators.parallelize import spread_scan
+from martian_moments_spark.operators.parallelize import spread
 from martian_moments_spark.functions.numeric import (
     fixed_avg,
     fixed_sum,
@@ -126,14 +126,15 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    kept = spread_scan(
+    kept = spread(
         # spread on two high-cardinality value columns: the group key
         # (flag, status) has only ~4 combinations and cannot fill the
         # session's partitions (guide §2.5)
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")),
-        sf_dir + ":lineitem",
         "l_extendedprice",
         "l_quantity",
+        memo_key=sf_dir + ":lineitem",
+        byte_cap=True,
     )
     return (
         kept.groupBy("l_returnflag", "l_linestatus")
@@ -229,12 +230,13 @@ def validation_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread on the agg key: the repartition establishes the very
         # hashpartitioning the (count-distinct two-phase) aggregate
         # needs, so it replaces the agg exchange rather than adding one
-        spread_scan(
+        spread(
             lineitem.filter(
                 F.col("l_shipdate") <= F.lit("1997-01-01").cast("timestamp")
             ),
-            sf_dir + ":lineitem",
             "l_orderkey",
+            memo_key=sf_dir + ":lineitem",
+            byte_cap=True,
         )
         .groupBy("l_orderkey")
         .agg(

@@ -93,8 +93,8 @@ def _sessionize(
     with hasTimedOut and no data, and the final session is emitted —
     the state-expiry path windows can't express.
 
-    DO-NOT-RETRY (r08, measured 3x — tools_sessionize_ab.py /
-    STREAM_SCALE.md): replacing this per-event loop with a numpy
+    DO-NOT-RETRY (r08, measured 3x — tools_sessionize_ab.py at commit
+    ba0d9f5 / STREAM_SCALE.md): replacing this per-event loop with a numpy
     diff segment scan + single close-frame measured 0.92x at the
     default trigger and no reliable win even at a 5 s trigger
     (~100 events/group) — the operator is dispatch-bound, not

@@ -887,31 +887,6 @@ def test_encode_wav_produces_real_payloads(spark):
             assert w.readframes(64) == samples.tobytes()
 
 
-def test_scan_is_narrow_conf_and_memo(spark):
-    """The r08 advisor fix: the spread decision is conf-pinnable and
-    probes physical planning at most once per memo key."""
-    from martian_moments_spark.llmops import textops as T
-
-    docs = spark.createDataFrame([(0, "x")], "doc_id LONG, text STRING")
-    key = "test:scan_is_narrow"
-    T._NARROW_SCAN_MEMO.pop(key, None)
-    try:
-        spark.conf.set("martian.textops.anchorSpread", "always")
-        assert T.scan_is_narrow(docs, memo_key=key) is True
-        spark.conf.set("martian.textops.anchorSpread", "never")
-        assert T.scan_is_narrow(docs, memo_key=key) is False
-        assert key not in T._NARROW_SCAN_MEMO  # pinned modes never probe/memoize
-        spark.conf.set("martian.textops.anchorSpread", "auto")
-        first = T.scan_is_narrow(docs, memo_key=key)
-        assert T._NARROW_SCAN_MEMO[key] is first
-        # memo wins even against a poisoned entry: no re-probe
-        T._NARROW_SCAN_MEMO[key] = not first
-        assert T.scan_is_narrow(docs, memo_key=key) is (not first)
-    finally:
-        spark.conf.unset("martian.textops.anchorSpread")
-        T._NARROW_SCAN_MEMO.pop(key, None)
-
-
 def test_char_anchor_grams_explicit_spread_matches_auto(spark):
     """spread=True/False/None all yield identical gram rows — the
     repartition decision is performance-only, never semantic."""

@@ -79,7 +79,7 @@ def test_ordered_limit_is_top_k(plans):
 
 def test_json_extract_is_shuffle_free(plans):
     # r11: the from_json parse is still per-row — the ONLY exchange
-    # allowed is the deliberate spread_scan REPARTITION_BY_NUM that
+    # allowed is the deliberate spread REPARTITION_BY_NUM that
     # unserializes the one-split gate-scale scan (identity at real
     # scale); any OTHER exchange (an aggregation, a join) would be a
     # real shuffle regression in a parse-only plan.

@@ -105,6 +105,9 @@ def measure(name, df, out, mode="update", run_seconds=RUN_SECONDS, trigger=None)
 # ---------------------------------------------------------------- disorder
 
 DISORDER_MARK = "## Watermark correctness under disorder (interval join)"
+# heading of the stateful_sessionize A/B record kept at the end of
+# STREAM_SCALE.md (its tool is in git history at commit ba0d9f5)
+AB_MARK = "## stateful_sessionize optimization A/B (r08)"
 
 
 def disorder_smoke(spark) -> dict:
@@ -399,17 +402,12 @@ def main() -> None:
     res = disorder_smoke(spark)
     with open("STREAM_SCALE.md", "a") as f:
         f.write(disorder_section(res))
-    # carry the sessionize A/B record (written by tools_sessionize_ab)
-    # through the full-table rewrite instead of clobbering it
-    try:
-        from tools_sessionize_ab import AB_MARK
-
-        cut = prior_doc.find(AB_MARK)
-        if cut != -1:
-            with open("STREAM_SCALE.md", "a") as f:
-                f.write("\n" + prior_doc[cut:].rstrip() + "\n")
-    except Exception:
-        pass
+    # carry the sessionize A/B record through the full-table rewrite
+    # instead of clobbering it
+    cut = prior_doc.find(AB_MARK)
+    if cut != -1:
+        with open("STREAM_SCALE.md", "a") as f:
+            f.write("\n" + prior_doc[cut:].rstrip() + "\n")
     print(json.dumps({"stream_smoke": out}))
     spark.stop()
 
@@ -426,14 +424,9 @@ def main_disorder_only() -> None:
     # disorder mark also drops a trailing A/B record — keep it aside
     # and re-append after the fresh disorder section
     tail = ""
-    try:
-        from tools_sessionize_ab import AB_MARK
-
-        ab_at = doc.find(AB_MARK)
-        if ab_at != -1:
-            tail = "\n" + doc[ab_at:].rstrip() + "\n"
-    except Exception:
-        pass
+    ab_at = doc.find(AB_MARK)
+    if ab_at != -1:
+        tail = "\n" + doc[ab_at:].rstrip() + "\n"
     cut = doc.find(DISORDER_MARK)
     if cut != -1:
         doc = doc[: doc.rfind("\n", 0, cut)]
