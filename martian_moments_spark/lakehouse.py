@@ -31,7 +31,15 @@ engine needs:
 - ``vacuum`` removes unreferenced data files older than the retention
   horizon (here: not referenced by ANY retained version); before
   expiring log entries it checkpoints the oldest retained version so
-  everything retained stays reconstructable.
+  everything retained stays reconstructable; a checkpoint also records
+  the schema, so enforcement and reads survive the expiry of the
+  entries that logged it;
+- reads plan from the schema the log records for the version they
+  read, so a snapshot scan starts no parquet footer-inference job
+  (tables without a logged schema still infer);
+- ``merge_upsert`` rewrites the whole snapshot anyway, so it writes it
+  at ``compact``'s target file size: OPTIMIZE on a merged table finds
+  nothing to fold and commits nothing.
 
 Legacy round-2 entries that carry a complete ``files`` list are read
 as implicit checkpoints (state := files), so existing tables upgrade
@@ -49,6 +57,7 @@ import os
 import time
 import uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 LOG_DIR = "_log"
@@ -57,6 +66,11 @@ LOG_DIR = "_log"
 # read is bounded by N log entries; N trades commit-time checkpoint
 # writes against read-time replay. Tests shrink it to exercise rolls.
 CHECKPOINT_INTERVAL = 10
+
+# Target size of a rewritten data file: ``compact`` sizes its output by
+# it, and so does ``merge_upsert``, which rewrites the whole snapshot
+# anyway — a merged table is then already compacted.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def _log_path(table: str) -> str:
@@ -145,10 +159,17 @@ def _write_checkpoint(table: str, version: int) -> None:
     beside the log. Derived state: written via tmp+rename (idempotent —
     any writer producing it computes identical content), safe to lose."""
     files, stats = _reconstruct_with_stats(table, version)
+    state = {"version": version, "files": files, "stats": stats}
+    sch = _latest_schema(table, version)
+    if sch is not None:
+        # the schema must outlive the entries that recorded it: after
+        # compact + vacuum the newest retained entry is often a
+        # schema-less compact entry anchored by this checkpoint
+        state["schema"] = sch
     logd = _log_path(table)
     tmp = os.path.join(logd, f"{version}.{uuid.uuid4().hex[:8]}.cptmp")
     with open(tmp, "w") as f:
-        json.dump({"version": version, "files": files, "stats": stats}, f)
+        json.dump(state, f)
     os.replace(tmp, os.path.join(logd, f"{version}.checkpoint.json"))
 
 
@@ -176,11 +197,20 @@ def snapshot_files(table: str, version: int | None = None) -> list[str]:
     return [os.path.join(table, p) for p in _reconstruct(table, v)]
 
 
-def _read_files(spark: SparkSession, table: str, files: list[str]) -> DataFrame:
+def _read_files(
+    spark: SparkSession, table: str, files: list[str], version: int
+) -> DataFrame:
     """Scan an explicit file list, per commit dir with that dir as
     basePath so hive-partition columns (the bucketed-merge layout) are
     recovered; a commit dir without partition dirs contributes no
-    extra columns."""
+    extra columns.
+
+    The scan plans from the schema logged for ``version`` (the version
+    the files belong to): no footer-inference job runs, and the data
+    columns follow the logged order (hive-partition columns last, as
+    Spark places them). A table without a logged schema (legacy
+    entries, raw ``_commit`` callers) falls back to inference, as does
+    a logged schema that does not parse as DDL."""
     from functools import reduce
 
     if not files:
@@ -205,14 +235,28 @@ def _read_files(spark: SparkSession, table: str, files: list[str]) -> DataFrame:
     by_dir: dict[str, list[str]] = {}
     for p in files:
         by_dir.setdefault(commit_dir(p), []).append(p)
+    reader = spark.read
+    sch = _latest_schema(table, version)
+    if sch is not None:
+        try:
+            reader = spark.read.schema(_schema_ddl(sch))
+        except ParseException:
+            pass  # no DDL spelling (a UDT, a nested name needing quotes)
     parts = [
-        spark.read.option("basePath", d).parquet(*fs)
+        reader.option("basePath", d).parquet(*fs)
         for d, fs in sorted(by_dir.items())
     ]
     # additive schema evolution: a commit may carry columns older
     # commits lack (never the reverse — columns are only added);
     # missing columns read as NULL, like parquet mergeSchema.
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
+def _schema_ddl(sch: dict) -> str:
+    """The DDL string of a logged column->type mapping."""
+    return ", ".join(
+        "`{}` {}".format(name.replace("`", "``"), typ) for name, typ in sch.items()
+    )
 
 
 def _empty_snapshot(spark: SparkSession, table: str, version: int | None) -> DataFrame:
@@ -225,18 +269,18 @@ def _empty_snapshot(spark: SparkSession, table: str, version: int | None) -> Dat
         raise FileNotFoundError(
             f"version {v} of {table!r} has no files and no recorded schema"
         )
-    ddl = ", ".join(f"`{name}` {typ}" for name, typ in sch.items())
-    return spark.createDataFrame([], ddl)
+    return spark.createDataFrame([], _schema_ddl(sch))
 
 
 def read_table(spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
     """Snapshot read: resolve the version's exact file list, then scan
     only those files. Time travel via ``version``. A version with an
     empty live set reads as an empty DataFrame with the logged schema."""
-    files = snapshot_files(table, version)
+    v = current_version(table) if version is None else version
+    files = snapshot_files(table, v)
     if not files:
-        return _empty_snapshot(spark, table, version)
-    return _read_files(spark, table, files)
+        return _empty_snapshot(spark, table, v)
+    return _read_files(spark, table, files, v)
 
 
 def version_asof(table: str, ts: float) -> int:
@@ -293,8 +337,9 @@ def read_table_pruned(
     table size."""
     from pyspark.sql import functions as F
 
-    files = snapshot_files(table, version)
-    stats = file_stats(table, version)
+    v = current_version(table) if version is None else version
+    files = snapshot_files(table, v)
+    stats = file_stats(table, v)
     keep = []
     for p in files:
         st = stats.get(_stored_path(table, p))
@@ -306,9 +351,9 @@ def read_table_pruned(
         # preserve the schema: read nothing via an always-false filter
         # (never happens on a non-empty intersection)
         if not files:
-            return _empty_snapshot(spark, table, version)
-        return _read_files(spark, table, files).filter(F.lit(False))
-    return _read_files(spark, table, keep).filter(F.col(col).between(lo, hi))
+            return _empty_snapshot(spark, table, v)
+        return _read_files(spark, table, files, v).filter(F.lit(False))
+    return _read_files(spark, table, keep, v).filter(F.col(col).between(lo, hi))
 
 
 def _stage_data(
@@ -373,18 +418,21 @@ class SchemaConflictError(ValueError):
 
 def _latest_schema(table: str, version: int) -> dict | None:
     """The table's column->type mapping as of ``version``: the newest
-    log entry at or below it that recorded a schema (schemas only
-    accumulate, so the newest record is the table schema). Entries
-    expired by vacuum are skipped — after deep vacuums enforcement is
-    best-effort, like stats-based pruning."""
+    log entry or checkpoint at or below it that recorded a schema
+    (schemas only accumulate, so the newest record is the table
+    schema; a checkpoint records the schema as of its version, so it
+    carries the schema past a vacuum that expires the entries that
+    logged it). Expired entries are skipped."""
+    logd = _log_path(table)
     for v in range(version, -1, -1):
-        try:
-            entry = _read_entry(table, v)
-        except FileNotFoundError:
-            continue
-        sch = entry.get("schema")
-        if sch is not None:
-            return sch
+        for name in (f"{v}.json", f"{v}.checkpoint.json"):
+            try:
+                with open(os.path.join(logd, name)) as f:
+                    sch = json.load(f).get("schema")
+            except FileNotFoundError:
+                continue
+            if sch is not None:
+                return sch
     return None
 
 
@@ -539,7 +587,15 @@ def merge_upsert(
     never a mix, and a crash before commit leaves only unreferenced
     files (invisible, vacuumable). Optimistic-retry on concurrent
     commits: the merge re-reads the NEW snapshot and re-merges, so a
-    lost race never silently drops the winner's rows."""
+    lost race never silently drops the winner's rows.
+
+    The merged snapshot is written as ceil(bytes / TARGET_FILE_BYTES)
+    files, the layout ``compact`` would produce, so a merged table
+    needs no OPTIMIZE; the bytes are those of the replaced snapshot's
+    files plus Catalyst's estimate of the batch."""
+    import math
+
+    from martian_moments_spark.operators.parallelize import _est_bytes
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
@@ -551,16 +607,33 @@ def merge_upsert(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
+        files = [] if base is None else snapshot_files(table, base)
         if base is not None:
-            prev = [_stored_path(table, p) for p in snapshot_files(table, base)]
-            target = read_table(spark, table, base)
-            survivors = target.join(batch.select(*keys), keys, "left_anti")
+            target = (
+                _read_files(spark, table, files, base)
+                if files
+                else _empty_snapshot(spark, table, base)
+            )
+            # the raw batch has the deduplicated batch's key set; anti-
+            # joining on it keeps a second row_number window (and its
+            # shuffle) out of the plan
+            survivors = target.join(batch_df.select(*keys), keys, "left_anti")
             merged = batch.unionByName(survivors)
         else:
-            prev = []
             merged = batch
-        sch = _enforced_schema(table, base, batch) if base is not None else _enforced_schema(table, None, batch)
+        # the merge rewrites the whole snapshot, so it writes at
+        # compaction size and OPTIMIZE finds nothing to fold. The
+        # batch's Catalyst estimate joins the replaced bytes so a large
+        # batch is never squeezed into too few writers; a batch without
+        # an estimate (an RDD-backed one reports Long.MaxValue) keeps
+        # the plan's own partitioning.
+        out_bytes = sum(os.path.getsize(p) for p in files) + _est_bytes(batch_df)
+        n_files = max(1, math.ceil(out_bytes / TARGET_FILE_BYTES))
+        if n_files < 1 << 31:
+            merged = merged.coalesce(n_files)
+        sch = _enforced_schema(table, base, batch)
         new = _stage_data(merged, table)
+        prev = [_stored_path(table, p) for p in files]
         try:
             return _commit(table, new, "merge", base, remove=prev, schema=sch)
         except FileExistsError:
@@ -662,7 +735,7 @@ def merge_upsert_bucketed(
             # commit dir — correct for this table's files AND for a
             # shallow clone's absolute external references.
             target = _read_files(
-                spark, table, [os.path.join(table, f) for f in touched_files]
+                spark, table, [os.path.join(table, f) for f in touched_files], base
             )
             # (re)derive the bucket deterministically from the keys:
             # uniform whether the source commit was bucketed or not
@@ -670,7 +743,7 @@ def merge_upsert_bucketed(
             if BUCKET_COL in target.columns:
                 target = target.drop(BUCKET_COL)
             target = target.withColumn(BUCKET_COL, bucket_expr(keys, num_buckets))
-            survivors = target.join(batch.select(*keys), keys, "left_anti")
+            survivors = target.join(batch_df.select(*keys), keys, "left_anti")
             merged = batch.unionByName(survivors)
         else:
             merged = batch
@@ -691,7 +764,7 @@ def merge_upsert_bucketed(
 def compact(
     spark: SparkSession,
     table: str,
-    target_bytes: int = 128 * 1024 * 1024,
+    target_bytes: int = TARGET_FILE_BYTES,
     buckets: list[int] | None = None,
 ) -> int:
     """Transactional OPTIMIZE: rewrite the (selected part of the)
@@ -707,7 +780,9 @@ def compact(
     only the named buckets' files rewrite; everything else carries
     over untouched in the delta commit — at 100 TB compaction runs
     incrementally over the buckets whose small-file count crossed a
-    threshold, never the whole table. Returns the new version."""
+    threshold, never the whole table. Returns the new version, or the
+    current one without committing when the selected files are already
+    no more than the target count (as a merge's output normally is)."""
     import math
 
     from martian_moments_spark.streaming.sinks import BUCKET_COL
@@ -722,11 +797,11 @@ def compact(
                 for p in files
                 if _bucket_of(_stored_path(table, p), BUCKET_COL) in chosen
             ]
-            if not files:
-                return base  # nothing to do; no empty commit
         total = sum(os.path.getsize(p) for p in files)
         n_files = max(1, math.ceil(total / target_bytes))
-        df = _read_files(spark, table, files).coalesce(n_files)
+        if len(files) <= n_files:
+            return base  # nothing to fold; no commit
+        df = _read_files(spark, table, files, base).coalesce(n_files)
         # a bucketed-merge table keeps its layout through compaction
         part = (BUCKET_COL,) if BUCKET_COL in df.columns else ()
         new = _stage_data(df, table, partition_by=part)
@@ -786,7 +861,7 @@ def delete_where(
             candidates.append(p)
         if not candidates:
             return base
-        survivors = _read_files(spark, table, candidates).filter(
+        survivors = _read_files(spark, table, candidates, base).filter(
             ~F.col(col).between(lo, hi)
         )
         from martian_moments_spark.streaming.sinks import BUCKET_COL
@@ -843,7 +918,7 @@ def update_where(
         if not candidates:
             return base
         matched = F.col(col).between(lo, hi)
-        df = _read_files(spark, table, candidates)
+        df = _read_files(spark, table, candidates, base)
         for name, expr in assignments.items():
             df = df.withColumn(name, F.when(matched, expr).otherwise(F.col(name)))
         from martian_moments_spark.streaming.sinks import BUCKET_COL

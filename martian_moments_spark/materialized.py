@@ -159,7 +159,9 @@ class MaterializedRollup:
             if delta_files:
                 merged = self._merge_partials(
                     self._aggregate(
-                        lh._read_files(spark, self.source_table, delta_files)
+                        lh._read_files(
+                            spark, self.source_table, delta_files, src_v
+                        )
                     ).unionByName(current)
                 )
             else:

@@ -954,12 +954,25 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE the builder is EAGER (ADVICE r11): the two bounded collects
     run at plan-construction time, so an explain-only consumer pays
     the transition-counting job. The driver-memory safety of the
-    collect is the vocabulary bound, asserted below — a caller whose
-    event_type column is secretly high-cardinality (user ids, urls)
-    fails loudly instead of OOMing the driver."""
+    collects is the vocabulary bound, checked on a scalar count before
+    either runs — a caller whose event_type column is secretly
+    high-cardinality (user ids, urls) fails loudly instead of OOMing
+    the driver."""
     events = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", "ts"
     )
+    nodes = events.select(F.col("event_type").alias("node")).distinct()
+    # the bound is checked on a scalar count BEFORE either collect runs:
+    # the transition collect is |nodes|^2 rows, so checking afterwards
+    # would let a high-cardinality column reach the driver first
+    n_nodes = nodes.count()
+    if n_nodes > _PR_MAX_NODES:
+        raise ValueError(
+            f"pagerank_event_graph: {n_nodes} distinct event types exceeds "
+            f"the vocabulary bound {_PR_MAX_NODES} the driver-side fold "
+            "relies on; for node sets that grow with the data use the "
+            "distributed round loop (connected_components' shape)."
+        )
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.withColumn("prev_type", F.lag("event_type").over(w))
     edge_rows = (
@@ -968,20 +981,9 @@ def pagerank_event_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("prev_type").alias("src"), F.col("event_type").alias("dst")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
-        .collect()  # bounded: |event types|^2, asserted below
+        .collect()  # bounded: |event types|^2, checked above
     )
-    node_rows = sorted(
-        r["node"]
-        for r in events.select(F.col("event_type").alias("node")).distinct().collect()
-    )
-    n_nodes = len(node_rows)
-    if n_nodes > _PR_MAX_NODES:
-        raise ValueError(
-            f"pagerank_event_graph: {n_nodes} distinct event types exceeds "
-            f"the vocabulary bound {_PR_MAX_NODES} the driver-side fold "
-            "relies on; for node sets that grow with the data use the "
-            "distributed round loop (connected_components' shape)."
-        )
+    node_rows = sorted(r["node"] for r in nodes.collect())
     base = (15 * _PR_SCALE) // (_PR_DAMP_DEN * n_nodes)
     out_w: dict = {}
     for r in edge_rows:

@@ -6,6 +6,14 @@ correctness-vs-oracle (UTC session timezone — DuckDB timestamps are
 UTC-naive) and for scale (AQE on, so skewed shuffles re-plan at
 runtime; shuffle partitions sized to cores locally, overridable for a
 real cluster via ``spark.sql.shuffle.partitions``).
+
+Stream checkpoints (``offsets/``, ``commits/``, ``sources/``) are
+written through Spark's FileSystem-based checkpoint manager. The
+default FileContext manager resolves symlinks before each rename, and
+without the native Hadoop library the JVM forks ``readlink`` for
+every one of them. The FileSystem rename is atomic on POSIX and on
+HDFS, so a checkpoint file still appears whole or not at all, and
+exactly-once recovery is unchanged.
 """
 
 from __future__ import annotations
@@ -13,6 +21,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def default_parallelism() -> int:
@@ -45,6 +58,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -47,3 +47,24 @@ def test_assert_bounded_once_key_memoizes_passing_checks(spark):
     # over-cap with a DIFFERENT key still fails — memo is per-dataset
     with pytest.raises(BoundedSideError):
         assert_bounded(spark.range(20), cap=10, what="memo side", once_key="ds2")
+
+
+def test_pagerank_checks_vocabulary_bound_before_any_collect(spark, monkeypatch):
+    """The driver-side fold's vocabulary bound is checked on a scalar
+    count, before the transition or node collect can run."""
+    from martian_moments_spark.plans import queries_events
+    from tests.conftest import SF_DIR_SMALL
+
+    DataFrame = type(spark.range(1))  # the concrete class (classic or connect)
+    calls = []
+    real = DataFrame.collect
+
+    def spy(self):
+        calls.append(self)
+        return real(self)
+
+    monkeypatch.setattr(queries_events, "_PR_MAX_NODES", 1)
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    with pytest.raises(ValueError, match="vocabulary bound 1"):
+        queries_events.pagerank_event_graph(spark, SF_DIR_SMALL)
+    assert calls == []

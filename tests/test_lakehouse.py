@@ -939,3 +939,174 @@ def test_clone_inherits_manifest_stats_without_footer_reads(spark, tmp_path):
     assert all("x" in st["min"] for st in stats.values())
     got = sorted(r["k"] for r in lh.read_table_pruned(spark, dst, "x", 100, 200).collect())
     assert got == list(range(10, 21))
+
+
+def test_schema_survives_vacuum_of_the_entries_that_logged_it(spark, tmp_path):
+    """After compact + vacuum the newest retained entry is the
+    schema-less compact entry; the checkpoint vacuum writes at that
+    version must carry the schema, or a retyping append slips through
+    and every later read of the table fails."""
+    table = str(tmp_path / "t")
+    lh.append(spark.createDataFrame([(1, 5)], "k BIGINT, v BIGINT"), table)
+    lh.append(spark.createDataFrame([(2, 6)], "k BIGINT, v BIGINT"), table)
+    v = lh.compact(spark, table)
+    assert lh._read_entry(table, v)["op"] == "compact"
+    lh.vacuum(table, keep_versions=1, retention_seconds=0)
+    assert lh._versions(table) == [v]
+    assert lh._latest_schema(table, v) == {"k": "bigint", "v": "bigint"}
+    with pytest.raises(lh.SchemaConflictError, match="v: bigint -> string"):
+        lh.append(spark.createDataFrame([(3, "x")], "k BIGINT, v STRING"), table)
+    assert lh.current_version(table) == v
+    assert _rows(lh.read_table(spark, table)) == {(1, 5), (2, 6)}
+
+
+def test_read_table_with_logged_schema_starts_no_job(spark, tmp_path):
+    """A snapshot read plans from the logged schema: building the
+    DataFrame launches no parquet footer-inference job. A table with no
+    logged schema (raw ``_commit`` entries) still infers, which does."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "t")
+    lh.append(
+        spark.createDataFrame([(1, "a", 2.0)], "k BIGINT, v STRING, x DOUBLE"), table
+    )
+    lh.append(spark.createDataFrame([(2, "b", 3.0, 7)],
+                                    "k BIGINT, v STRING, x DOUBLE, extra INT"), table)
+    raw = str(tmp_path / "raw")
+    os.makedirs(os.path.join(raw, "data_raw"))
+    pq.write_table(pa.table({"k": [1]}), os.path.join(raw, "data_raw", "p.parquet"))
+    lh._commit(raw, [os.path.join("data_raw", "p.parquet")], "append", None)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("logged-schema-read", "logged-schema-read")
+        df = lh.read_table(spark, table)
+        old = lh.read_table(spark, table, version=0)
+        assert list(tracker.getJobIdsForGroup("logged-schema-read")) == []
+        sc.setJobGroup("inferred-read", "inferred-read")
+        inferred = lh.read_table(spark, raw)
+        assert list(tracker.getJobIdsForGroup("inferred-read")) != []
+    finally:
+        sc.setJobGroup(None, None)
+    assert df.columns == ["k", "v", "x", "extra"]
+    assert old.columns == ["k", "v", "x"]
+    assert _rows(df) == {(1, "a", 2.0, None), (2, "b", 3.0, 7)}
+    assert _rows(inferred) == {(1,)}
+
+
+def test_read_table_infers_when_logged_schema_is_not_ddl(spark, tmp_path):
+    """A logged type string that does not parse back as DDL (here a
+    nested field name that needs quoting) falls back to inference."""
+    table = str(tmp_path / "t")
+    df = spark.createDataFrame([(1, (2,))], "k BIGINT, s STRUCT<`a b`: INT>")
+    lh.append(df, table)
+    assert lh._latest_schema(table, 0)["s"] == "struct<a b:int>"
+    got = lh.read_table(spark, table).collect()
+    assert [(r["k"], r["s"]["a b"]) for r in got] == [(1, 2)]
+
+
+def test_merge_writes_a_compacted_snapshot(spark, tmp_path):
+    """merge_upsert rewrites the whole snapshot at compaction size, so
+    the merged table is one file and OPTIMIZE on it is a no-op: same
+    version returned, no log entry written. A batch without a size
+    estimate (RDD-backed) keeps the plan's partitioning."""
+    table = str(tmp_path / "t")
+    schema = "k BIGINT, v STRING, seq BIGINT"
+    lh.append(
+        spark.createDataFrame([(k, "old", 1) for k in range(40)], schema).repartition(4),
+        table,
+    )
+    assert len(lh.snapshot_files(table)) > 1
+    # a batch Catalyst can size, like a stream's micro-batch
+    batch = spark.range(30, 50).selectExpr("id AS k", "'new' AS v", "2L AS seq")
+    v = lh.merge_upsert(spark, batch.repartition(3), table, ["k"], "seq")
+    assert len(lh.snapshot_files(table)) == 1
+    assert lh.compact(spark, table) == v
+    assert lh._versions(table) == [0, v]
+    got = {r["k"]: r["v"] for r in lh.read_table(spark, table).collect()}
+    assert got == {k: ("new" if k >= 30 else "old") for k in range(50)}
+
+    rdd_batch = spark.createDataFrame([(k, "rdd", 3) for k in range(5)], schema)
+    lh.merge_upsert(spark, rdd_batch.repartition(3), table, ["k"], "seq")
+    assert len(lh.snapshot_files(table)) > 1
+
+
+def test_merge_plan_has_one_row_number_window(spark, tmp_path, monkeypatch):
+    """The anti-join takes the raw batch's keys (the same key set as the
+    deduplicated batch), so the staged merge plan runs the row_number
+    window once, for both the keyed and the bucketed merge."""
+    staged = []
+    real = lh._stage_data
+
+    def spy(df, table, partition_by=()):
+        staged.append(df)
+        return real(df, table, partition_by)
+
+    monkeypatch.setattr(lh, "_stage_data", spy)
+    schema = "k BIGINT, v STRING, seq BIGINT"
+    first = spark.createDataFrame([(1, "a", 1), (2, "a", 1)], schema)
+    batch = spark.createDataFrame([(2, "b", 2), (2, "c", 3), (3, "b", 2)], schema)
+    want = {1: "a", 2: "c", 3: "b"}
+    for name, merge in (
+        ("plain", lambda b, t: lh.merge_upsert(spark, b, t, ["k"], "seq")),
+        ("bucketed", lambda b, t: lh.merge_upsert_bucketed(
+            spark, b, t, ["k"], "seq", num_buckets=4)),
+    ):
+        table = str(tmp_path / name)
+        merge(first, table)
+        staged.clear()
+        merge(batch, table)
+        plan = staged[-1]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("Window [") == 1, plan
+        got = {r["k"]: r["v"] for r in lh.read_table(spark, table).collect()}
+        assert got == want
+
+
+def test_upsert_sink_restarts_exactly_once_on_filesystem_checkpoints(spark, tmp_path):
+    """get_spark routes stream checkpoints through the FileSystem-based
+    manager (no forked ``readlink`` per rename); a restart from that
+    checkpoint processes only files it has not committed: no new
+    version without new input, one version for the next file."""
+    import json as _json
+
+    from martian_moments_spark.session import _CHECKPOINT_MANAGER
+    from martian_moments_spark.streaming.sources import file_json_stream
+
+    ck = str(tmp_path / "ck")
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(ck), spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert manager.getClass().getName() == _CHECKPOINT_MANAGER
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table = str(tmp_path / "t")
+
+    def land(name, rows):
+        with open(src / name, "w") as f:
+            for r in rows:
+                f.write(_json.dumps(r) + "\n")
+
+    def run():
+        q = lh.upsert_sink(
+            file_json_stream(spark, str(src), "k BIGINT, v STRING, seq BIGINT"),
+            table, ck, keys=["k"], order_col="seq",
+        )
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+
+    land("b1.json", [{"k": 1, "v": "a", "seq": 1}, {"k": 2, "v": "a", "seq": 1}])
+    run()
+    assert lh.current_version(table) == 0
+    run()  # restart, nothing new: no batch, no commit
+    assert lh.current_version(table) == 0
+    land("b2.json", [{"k": 2, "v": "b", "seq": 2}, {"k": 3, "v": "b", "seq": 2}])
+    run()
+    assert lh.current_version(table) == 1
+    commits = os.listdir(os.path.join(ck, "commits"))
+    assert sorted(n for n in commits if not n.startswith(".")) == ["0", "1"]
+    got = {r["k"]: r["v"] for r in lh.read_table(spark, table).collect()}
+    assert got == {1: "a", 2: "b", 3: "b"}
