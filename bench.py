@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import statistics
+import subprocess
 import sys
 import time
 
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.types import MapType  # noqa: E402
 
 from martian_moments_spark.plans import load_all  # noqa: E402
-from martian_moments_spark.session import get_spark  # noqa: E402
+from martian_moments_spark.session import default_parallelism, get_spark  # noqa: E402
 
 
 def consume(df) -> None:
@@ -43,6 +44,84 @@ def consume(df) -> None:
         for f in df.schema.fields
     ]
     df.select(F.xxhash64(*cols).alias("__h")).agg(F.bit_xor("__h")).collect()
+
+
+def prior_timings(lines, sf: str, cpus: int) -> tuple[dict[str, list[float]], dict[str, list[float]]]:
+    """Per-query prior times from BENCH_HISTORY.jsonl lines, as
+    (median lineage, best lineage). Only rows of the same sf AND the
+    same core count feed the gate: an 8-core run read against 32-core
+    history is a hardware difference, not a regression. Rows written
+    before ``cpus`` was recorded never gate.
+
+    Lineage discipline (ADVICE r10): records written before the r10
+    estimator switch hold BEST-OF times in "queries"; since r10 they
+    hold medians and carry a separate "best" map. Comparing a median
+    against a history dominated by best-of rows is biased toward false
+    regression flags (median sits systematically above best-of), so
+    median-era rows feed the median lineage, and old "queries" values
+    (best-of by construction) plus median-era "best" maps feed the
+    best lineage.
+    """
+    prior_med: dict[str, list[float]] = {}
+    prior_best: dict[str, list[float]] = {}
+    for line in lines:
+        try:
+            rec = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        if str(rec.get("sf")) != sf or rec.get("cpus") != cpus:
+            continue
+        median_era = rec.get("passes") == "median-of-3-to-5"
+        if median_era:
+            for q, t in rec.get("queries", {}).items():
+                prior_med.setdefault(q, []).append(t)
+        for q, t in (rec.get("best") or (rec.get("queries") if not median_era else {}) or {}).items():
+            prior_best.setdefault(q, []).append(t)
+    return prior_med, prior_best
+
+
+def find_regressions(
+    timings: dict[str, float],
+    best: dict[str, float],
+    prior_med: dict[str, list[float]],
+    prior_best: dict[str, list[float]],
+) -> dict[str, dict]:
+    """Queries whose time is > 1.5x and > 0.3 s above the median prior:
+    this run's median against prior medians when at least two exist,
+    else this run's best against the prior best lineage."""
+    regressions = {}
+    for name, t in timings.items():
+        if len(prior_med.get(name, [])) >= 2:
+            now, m = t, statistics.median(prior_med[name])
+            lineage = "median"
+        elif prior_best.get(name):
+            now, m = best[name], statistics.median(prior_best[name])
+            lineage = "best"
+        else:
+            continue
+        if now > 0.3 and now > 1.5 * m and now - m > 0.3:
+            regressions[name] = {
+                "now": now,
+                "median": round(m, 4),
+                "ratio": round(now / m, 2),
+                "lineage": lineage,
+            }
+    return regressions
+
+
+def _git_commit() -> str | None:
+    """HEAD of the checkout bench.py runs from; None outside a checkout."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip() or None
 
 
 def main() -> None:
@@ -100,64 +179,30 @@ def main() -> None:
     total = round(sum(timings.values()), 4)
     best_total = round(sum(best.values()), 4)
 
-    # Per-query history: every run appends to BENCH_HISTORY.jsonl, and
-    # the current run is compared against the MEDIAN prior time at the
-    # same sf (the all-time minimum ratchets low and flags ±40% machine
-    # noise every run). Ratios > 1.5x with > 0.3 s absolute delta are
-    # reported in the JSON line itself — regressions were previously
-    # only findable by hand-diffing BENCH_r{N}.json files.
-    #
-    # Lineage discipline (ADVICE r10): records written before the r10
-    # estimator switch hold BEST-OF times in "queries"; since r10 they
-    # hold medians and carry a separate "best" map. Comparing this
-    # run's median against a history dominated by best-of rows is
-    # biased toward false regression flags (median sits systematically
-    # above best-of). So the gate compares like lineages: median vs
-    # prior medians when enough median-era rows exist, else this run's
-    # BEST against the prior best lineage (old "queries" values are
-    # best-of by construction; median-era rows contribute their
-    # "best" map).
+    # Per-query history: every run appends to BENCH_HISTORY.jsonl with
+    # its core count and commit, and the current run is compared against
+    # the MEDIAN prior time at the same sf and core count (the all-time
+    # minimum ratchets low and flags ±40% machine noise every run).
+    # Ratios > 1.5x with > 0.3 s absolute delta are reported in the JSON
+    # line itself — regressions were previously only findable by
+    # hand-diffing BENCH_r{N}.json files. ``prior_timings`` keeps the
+    # median and best-of lineages apart.
     hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl")
-    prior_med: dict[str, list[float]] = {}
-    prior_best: dict[str, list[float]] = {}
+    cpus = default_parallelism()
+    history: list[str] = []
     if os.path.exists(hist_path):
         with open(hist_path) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if str(rec.get("sf")) != sf:
-                    continue
-                median_era = rec.get("passes") == "median-of-3-to-5"
-                if median_era:
-                    for q, t in rec.get("queries", {}).items():
-                        prior_med.setdefault(q, []).append(t)
-                for q, t in (rec.get("best") or (rec.get("queries") if not median_era else {}) or {}).items():
-                    prior_best.setdefault(q, []).append(t)
-    regressions = {}
-    for name, t in timings.items():
-        if len(prior_med.get(name, [])) >= 2:
-            now, m = t, statistics.median(prior_med[name])
-            lineage = "median"
-        elif prior_best.get(name):
-            now, m = best[name], statistics.median(prior_best[name])
-            lineage = "best"
-        else:
-            continue
-        if now > 0.3 and now > 1.5 * m and now - m > 0.3:
-            regressions[name] = {
-                "now": now,
-                "median": round(m, 4),
-                "ratio": round(now / m, 2),
-                "lineage": lineage,
-            }
+            history = f.readlines()
+    prior_med, prior_best = prior_timings(history, sf, cpus)
+    regressions = find_regressions(timings, best, prior_med, prior_best)
     with open(hist_path, "a") as f:
         f.write(
             json.dumps(
                 {
                     "ts": round(time.time(), 1),
                     "sf": sf,
+                    "cpus": cpus,
+                    "commit": _git_commit(),
                     "total": total,
                     "queries": timings,
                     "best": best,
