@@ -7,7 +7,8 @@ directories have no transaction, so an overwrite exposes readers to
 half-written state and a crashed writer leaves garbage that the next
 scan picks up. This module adds the smallest useful transaction layer —
 the core idea of Delta/Iceberg-style table formats, reduced to what the
-engine needs:
+engine needs — and it is the engine's only way to mutate a table:
+appends, merges, deletes, updates and OPTIMIZE all commit through it.
 
 - data files are immutable parquet files with unique names; they are
   NEVER deleted or modified by a commit, only referenced;
@@ -71,6 +72,20 @@ CHECKPOINT_INTERVAL = 10
 # it, and so does ``merge_upsert``, which rewrites the whole snapshot
 # anyway — a merged table is then already compacted.
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+#: Name of the derived hash-bucket partition column a bucketed-merge
+#: table is laid out by. It is a physical-layout detail but surfaces in
+#: the read-back schema (as any partition column does).
+BUCKET_COL = "__part"
+
+
+def bucket_expr(keys: list[str], num_buckets: int):
+    """Deterministic bucket assignment for a merge key: every version
+    of a key lands in the same bucket, so a bucketed merge only ever
+    rewrites the buckets its batch touches."""
+    from pyspark.sql import functions as F
+
+    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
 
 
 def _log_path(table: str) -> str:
@@ -574,6 +589,20 @@ def overwrite(df: DataFrame, table: str, meta: dict | None = None) -> int:
             continue
 
 
+def _latest_per_key(batch_df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+    """Last-writer-wins dedup of a merge batch: one row per key, the
+    one with the greatest ``order_col`` (the SURVEY §7.4.2 tie-break)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window as W
+
+    w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    return (
+        batch_df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def merge_upsert(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -596,17 +625,10 @@ def merge_upsert(
     import math
 
     from martian_moments_spark.operators.parallelize import _est_bytes
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
 
     while True:
         base = current_version(table)
-        w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        batch = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch = _latest_per_key(batch_df, keys, order_col)
         files = [] if base is None else snapshot_files(table, base)
         if base is not None:
             target = (
@@ -647,11 +669,14 @@ def upsert_sink(
     keys: list[str],
     order_col: str,
 ):
-    """Streaming keyed upsert through the commit log: one atomic
-    version per micro-batch (E8 with reader isolation — contrast
-    streaming.sinks.partitioned_upsert, which bounds write
-    amplification instead; at 100 TB the two compose: partition-scoped
-    data layout underneath a manifest commit)."""
+    """Streaming keyed upsert (E8): ``merge_upsert`` per micro-batch,
+    so each batch is one atomic version and readers never see a
+    partly merged table. That commit entry is the batch's
+    load-complete record (E9): it names the op, the added files with
+    their row counts and ``committed_at``, and it lands or not with the
+    data. A batch replayed after a crash re-merges idempotently, and a
+    restart with no new input runs no batch and commits nothing.
+    Returns the started query."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert(batch_df.sparkSession, batch_df, table, keys, order_col)
@@ -681,34 +706,23 @@ def merge_upsert_bucketed(
     order_col: str,
     num_buckets: int = 16,
 ) -> int:
-    """The full 100 TB merge: partition-scoped write amplification AND
-    snapshot isolation in ONE commit. The table is laid out by the
-    deterministic hash bucket of the merge key
-    (streaming.sinks.bucket_expr, hive-partition dirs inside each
-    commit); a batch reads only its touched buckets' files (pruned by
-    path, no scan of the rest), anti-joins, and stages replacement
-    files for exactly those buckets. The new version references the
-    untouched buckets' OLD files verbatim plus the new ones — an
-    untouched bucket's bytes are never rewritten, and the whole swap
-    is one atomic commit with optimistic retry.
+    """The 100 TB merge: partition-scoped write amplification in one
+    snapshot-isolated commit. The table is laid out by the
+    deterministic hash bucket of the merge key (``bucket_expr``,
+    hive-partition dirs inside each commit); a batch reads only its
+    touched buckets' files (pruned by path, no scan of the rest),
+    anti-joins, and stages replacement files for exactly those buckets.
+    The new version references the untouched buckets' OLD files
+    verbatim plus the new ones — an untouched bucket's bytes are never
+    rewritten, and the whole swap is one atomic commit with optimistic
+    retry.
 
-    Contrast the two mechanisms it composes: partitioned_upsert bounds
-    write amplification but overwrites in place (readers race);
-    lakehouse.merge_upsert isolates readers but rewrites the full
-    snapshot. This does both; per batch it writes
-    O(touched/num_buckets) of the table and commits once."""
-    from martian_moments_spark.streaming.sinks import BUCKET_COL, bucket_expr
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window as W
-
+    ``merge_upsert`` rewrites the full snapshot per batch; this writes
+    O(touched/num_buckets) of the table per batch and commits once."""
     while True:
         base = current_version(table)
-        w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
-        batch = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-            .withColumn(BUCKET_COL, bucket_expr(keys, num_buckets))
+        batch = _latest_per_key(batch_df, keys, order_col).withColumn(
+            BUCKET_COL, bucket_expr(keys, num_buckets)
         )
         if base is None:
             new = _stage_data(batch, table, partition_by=(BUCKET_COL,))
@@ -769,12 +783,10 @@ def compact(
 ) -> int:
     """Transactional OPTIMIZE: rewrite the (selected part of the)
     current snapshot into ceil(bytes/target) files and commit the
-    compacted layout as a new version. Contrast
-    operators.layout.compact_small_files' rename swap: under the
-    commit log no swap window exists at all — readers hold the old
-    snapshot until the single commit lands, a crash leaves only
-    unreferenced (vacuumable) files, and time travel to the
-    pre-compaction version still works.
+    compacted layout as a new version. Nothing is renamed or
+    overwritten in place: readers hold the old snapshot until the
+    single commit lands, a crash leaves only unreferenced (vacuumable)
+    files, and time travel to the pre-compaction version still works.
 
     ``buckets`` is the OPTIMIZE WHERE form for bucketed-merge tables:
     only the named buckets' files rewrite; everything else carries
@@ -784,8 +796,6 @@ def compact(
     current one without committing when the selected files are already
     no more than the target count (as a merge's output normally is)."""
     import math
-
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
 
     while True:
         base = current_version(table)
@@ -864,8 +874,6 @@ def delete_where(
         survivors = _read_files(spark, table, candidates, base).filter(
             ~F.col(col).between(lo, hi)
         )
-        from martian_moments_spark.streaming.sinks import BUCKET_COL
-
         part = (BUCKET_COL,) if BUCKET_COL in survivors.columns else ()
         new = _stage_data(survivors, table, partition_by=part)
         prev = [_stored_path(table, p) for p in candidates]
@@ -921,8 +929,6 @@ def update_where(
         df = _read_files(spark, table, candidates, base)
         for name, expr in assignments.items():
             df = df.withColumn(name, F.when(matched, expr).otherwise(F.col(name)))
-        from martian_moments_spark.streaming.sinks import BUCKET_COL
-
         part = (BUCKET_COL,) if BUCKET_COL in df.columns else ()
         new = _stage_data(df, table, partition_by=part)
         prev = [_stored_path(table, p) for p in candidates]

@@ -56,151 +56,6 @@ def bucketed_table(
     writer.saveAsTable(table_name)
 
 
-#: Commit manifest written inside a fully-written compaction tmp dir.
-#: Its presence (with matching file list) marks the tmp as roll-forward
-#: safe; its absence marks the tmp as garbage.
-COMPACT_MANIFEST = "_COMPACT_COMMIT.json"
-
-
-def _data_files(root: str) -> list[str]:
-    import os
-
-    out = []
-    for dirpath, _dirs, files in os.walk(root):
-        out += [os.path.join(dirpath, f) for f in files if f.endswith(".parquet")]
-    return out
-
-
-def _tmp_complete(tmp: str) -> bool:
-    """True iff the tmp dir carries a commit manifest whose file list
-    (relative path + size) matches what is on disk."""
-    import json
-    import os
-
-    manifest = os.path.join(tmp, COMPACT_MANIFEST)
-    if not os.path.exists(manifest):
-        return False
-    try:
-        with open(manifest) as f:
-            expected = json.load(f)["files"]
-    except (OSError, ValueError, KeyError):
-        return False
-    actual = {
-        os.path.relpath(p, tmp): os.path.getsize(p) for p in _data_files(tmp)
-    }
-    return actual == {e["path"]: e["size"] for e in expected}
-
-
-def recover_compaction(path: str) -> str:
-    """Repair any state an interrupted compaction left behind. Safe to
-    call any time (no-op when clean); compact_small_files calls it on
-    entry. Crash windows and their repair:
-
-    - tmp written + manifest committed, table renamed away (crash
-      between the two swap renames): roll FORWARD — the tmp is proven
-      complete, so it becomes the table and the backup is dropped.
-    - tmp present without a valid manifest: the write never finished —
-      drop the tmp (and restore the backup if the table is missing).
-    - backup + table both present (crash after swap, before cleanup):
-      the new table is live — drop the backup.
-
-    Returns one of 'clean', 'rolled_forward', 'rolled_back',
-    'dropped_tmp', 'dropped_bak'."""
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    bak = path.rstrip("/") + ".__compact_bak__"
-    if os.path.exists(tmp):
-        if _tmp_complete(tmp) and not os.path.exists(path):
-            os.rename(tmp, path)
-            os.remove(os.path.join(path, COMPACT_MANIFEST))
-            if os.path.exists(bak):
-                shutil.rmtree(bak)
-            return "rolled_forward"
-        shutil.rmtree(tmp)
-        if os.path.exists(bak) and not os.path.exists(path):
-            os.rename(bak, path)
-            return "rolled_back"
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
-            return "dropped_tmp"
-        return "dropped_tmp"
-    if os.path.exists(bak):
-        if os.path.exists(path):
-            shutil.rmtree(bak)
-            return "dropped_bak"
-        os.rename(bak, path)
-        return "rolled_back"
-    return "clean"
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    partition_by: Sequence[str] = (),
-) -> dict:
-    """Bin-packing small-file compaction (the OPTIMIZE half of a
-    lakehouse maintenance cycle). Streaming/incremental appends (E7)
-    accrete one file per micro-batch; scans then pay per-file open +
-    footer-read + task-schedule overhead, which at 100 TB dominates.
-    Rewrite the table into ceil(total_bytes / target_bytes) files
-    (per partition directory when ``partition_by`` is set), then swap
-    directories so readers never see a half-written table.
-
-    Crash safety: ``recover_compaction`` runs on entry to repair any
-    earlier interrupted run; after the tmp is fully written a commit
-    manifest (file list + sizes) is sealed inside it, so a crash
-    anywhere in the two-rename swap window is recoverable — manifest
-    present → roll forward, absent → roll back. Each individual rename
-    is atomic on POSIX; on an object store use the table format's
-    transaction log instead.
-
-    Returns {files_before, files_after, bytes_total, recovered}.
-    """
-    import json
-    import math
-    import os
-    import shutil
-
-    recovered = recover_compaction(path)
-
-    before = _data_files(path)
-    bytes_total = sum(os.path.getsize(f) for f in before)
-    n_files = max(1, math.ceil(bytes_total / target_bytes))
-    df = spark.read.parquet(path)
-
-    tmp = path.rstrip("/") + ".__compact_tmp__"
-    if partition_by:
-        # one shuffle keyed on the partition columns: rows for a
-        # directory land together, n_files output files per directory.
-        out = df.repartition(n_files, *[*partition_by])
-        out.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-    else:
-        # coalesce, not repartition: narrowing to n_files needs no shuffle.
-        df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-
-    files = [
-        {"path": os.path.relpath(p, tmp), "size": os.path.getsize(p)}
-        for p in sorted(_data_files(tmp))
-    ]
-    with open(os.path.join(tmp, COMPACT_MANIFEST), "w") as f:
-        json.dump({"files": files}, f)
-
-    bak = path.rstrip("/") + ".__compact_bak__"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
-    os.remove(os.path.join(path, COMPACT_MANIFEST))
-    return {
-        "files_before": len(before),
-        "files_after": len(_data_files(path)),
-        "bytes_total": bytes_total,
-        "recovered": recovered,
-    }
-
-
 def z_value(a, b, bits: int = 16):
     """Morton/Z-order interleave of two non-negative int columns — the
     multi-dimension clustering key the reference approximates with

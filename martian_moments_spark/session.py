@@ -15,6 +15,13 @@ every one of them. The FileSystem rename is atomic on POSIX and on
 HDFS, so a checkpoint file still appears whole or not at all, and
 exactly-once recovery is unchanged.
 
+Python workers get the directory that holds this package on their
+``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``, merged by Spark with
+its own entries). Query UDFs import ``martian_moments_spark`` inside
+the worker; without it they fail with ``ModuleNotFoundError`` whenever
+the driver found the package through ``sys.path`` alone and the worker
+starts outside the checkout.
+
 Two more fixed defaults let a session compile each query once; neither
 changes a plan, a result or a job:
 
@@ -49,6 +56,9 @@ _CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager"
 )
+
+# The directory holding this package, for the Python workers' path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Generated-class cache entries: the engine's working set of whole-stage
 # codegen classes fits, so a repeated query reuses its compiled classes.
@@ -88,6 +98,7 @@ def get_spark(
         .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_MANAGER)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -9,10 +9,10 @@ Airflow-triggered DAGs — collapses in Spark to:
 - kafka source/sink wrappers for the three control-message topics
   (E1/E2/S7/S8) — buildable only when a broker exists; the wrappers
   gate on the kafka package being available.
-- ``foreachBatch`` sinks: each micro-batch ≈ one reference DAG run
-  (E1); the batch applies the same append/upsert semantics as the
-  incremental layer (E7/E8) and emits a load-complete control record
-  (E9).
+- sinks: each micro-batch ≈ one reference DAG run (E1). The append
+  sink is Spark's exactly-once file sink (E7); the keyed upsert is
+  ``lakehouse.upsert_sink`` (E8), one commit-log version per batch,
+  and that commit entry is the load-complete record (E9).
 - watermarked windows + the gap-detection feedback loop (E6) for
   late/missing data.
 """
@@ -24,12 +24,7 @@ from martian_moments_spark.streaming.sources import (  # noqa: F401
     kafka_stream,
     parse_kafka_frame,
 )
-from martian_moments_spark.streaming.sinks import (  # noqa: F401
-    append_parquet_sink,
-    bucket_expr,
-    partitioned_upsert,
-    upsert_foreach_batch,
-)
+from martian_moments_spark.streaming.sinks import append_parquet_sink  # noqa: F401
 from martian_moments_spark.streaming.windows import (  # noqa: F401
     dedup_within_watermark,
     watermarked_interval_join,

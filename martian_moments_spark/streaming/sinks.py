@@ -1,22 +1,18 @@
-"""Streaming sinks: append + keyed-upsert foreachBatch, with
-load-complete control records.
+"""Streaming sinks: the exactly-once parquet append and the
+algebraic-sketch sinks.
 
-``foreachBatch`` is the micro-batch ≈ DAG-run equivalence (E1): each
-batch applies the same deterministic append/upsert semantics as the
-incremental layer (queries_incremental), then emits the load-complete
-control record the reference publishes to Kafka after every COPY
+``foreachBatch`` is the micro-batch ≈ DAG-run equivalence (E1). The
+keyed upsert sink (E8) is ``lakehouse.upsert_sink``: each micro-batch
+is one commit-log version, and that commit entry is the load-complete
+record the reference publishes to Kafka after every COPY
 (src/utils/snowflake.py:61-65, E9).
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def append_parquet_sink(
@@ -33,125 +29,6 @@ def append_parquet_sink(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     return writer.trigger(availableNow=True).start()
-
-
-#: Name of the derived hash-bucket partition column a merge target is
-#: laid out by. It is a physical-layout detail but surfaces in the
-#: read-back schema (as any partition column does).
-BUCKET_COL = "__part"
-
-
-def bucket_expr(keys: list[str], num_buckets: int):
-    """Deterministic bucket assignment for a merge key: every version
-    of a key lands in the same partition, so an upsert only ever needs
-    to rewrite the partitions its batch touches."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
-
-
-def partitioned_upsert(
-    batch_df: DataFrame,
-    target_path: str,
-    keys: list[str],
-    order_col: str,
-    num_buckets: int = 16,
-) -> int:
-    """Partition-scoped keyed MERGE — the no-MERGE-on-parquet rewrite
-    (X2) that only touches the partitions the batch hits:
-
-    1. dedup the batch on ``keys`` (latest ``order_col`` wins — the
-       SURVEY §7.4.2 tie-break) and tag each row's hash bucket;
-    2. read ONLY the touched buckets of the target (partition pruning
-       on ``__part``) and anti-join out collided keys;
-    3. ``localCheckpoint(eager=True)`` the merged frame — durable
-       materialization severed from the target's files, so the
-       overwrite can never recompute from a half-truncated source
-       (cache() is best-effort and is not enough);
-    4. dynamic-partition-overwrite: ``mode=overwrite`` +
-       ``partitionBy(__part)`` with ``partitionOverwriteMode=dynamic``
-       replaces exactly the buckets present in the merged frame —
-       untouched buckets' files are not rewritten.
-
-    At 100 TB this bounds a batch's write amplification to
-    (touched buckets / num_buckets) of the table instead of 1.0; on a
-    real cluster swap localCheckpoint for a reliable checkpoint dir.
-    Returns the merged row count.
-    """
-    from pyspark.sql.window import Window as W
-
-    spark = batch_df.sparkSession
-    w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
-    batch = (
-        batch_df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .withColumn(BUCKET_COL, bucket_expr(keys, num_buckets))
-    )
-    if os.path.exists(target_path):
-        touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
-        if not touched:
-            return 0
-        target = spark.read.parquet(target_path).filter(F.col(BUCKET_COL).isin(touched))
-        survivors = target.join(batch.select(*keys), keys, "left_anti")
-        merged = batch.unionByName(survivors)
-    else:
-        merged = batch
-    merged = merged.localCheckpoint(eager=True)
-    rows = merged.count()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(target_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return rows
-
-
-def upsert_foreach_batch(
-    stream_df: DataFrame,
-    target_path: str,
-    checkpoint: str,
-    keys: list[str],
-    order_col: str,
-    num_buckets: int = 16,
-    on_batch_complete: Callable[[int, int], None] | None = None,
-):
-    """Keyed last-writer-wins upsert sink — dbt 'merge' strategy (E8)
-    per micro-batch: ``partitioned_upsert`` per batch, then the
-    load-complete control record (E9)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        rows = partitioned_upsert(batch_df, target_path, keys, order_col, num_buckets)
-        write_load_complete(os.path.dirname(target_path), target_path, batch_id, rows)
-        if on_batch_complete:
-            on_batch_complete(batch_id, rows)
-
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def write_load_complete(control_dir: str, path: str, batch_id: int, rows: int) -> str:
-    """Load-complete control record (E9): the reference's
-    {tmp_jsonl_staging_path, status, timestamp} Kafka message
-    (src/utils/snowflake.py:61-65) as a marker file (a Kafka sink is a
-    one-line swap via sources.kafka_sink_frame)."""
-    os.makedirs(control_dir, exist_ok=True)
-    marker = os.path.join(control_dir, f"_load_complete_{batch_id}.json")
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "path": path,
-                "status": "success",
-                "rows": rows,
-                "batch_id": batch_id,
-                "timestamp": time.strftime("%Y-%m-%dT%H:%M:%S", time.gmtime()),
-            },
-            f,
-        )
-    return marker
 
 
 def cms_sketch_sink(

@@ -181,7 +181,7 @@ def test_bucketed_merge_reuses_untouched_files_verbatim(spark, tmp_path):
     )
     v = lh.merge_upsert_bucketed(spark, delta, table, ["k"], "seq", num_buckets=8)
 
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
+    from martian_moments_spark.lakehouse import BUCKET_COL
     touched = {
         r[0]
         for r in delta.selectExpr("cast(pmod(xxhash64(k), 8) as int)").distinct().collect()
@@ -296,7 +296,7 @@ def test_bucketed_merge_entry_is_touched_scoped(spark, tmp_path):
     delta = spark.createDataFrame([(3, "new", 2)], "k BIGINT, v STRING, seq BIGINT")
     v = lh.merge_upsert_bucketed(spark, delta, table, ["k"], "seq", num_buckets=8)
 
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
+    from martian_moments_spark.lakehouse import BUCKET_COL
 
     touched = {
         r[0]
@@ -322,7 +322,7 @@ def test_bucketed_merge_full_fallback_on_mixed_layout(spark, tmp_path):
     )
     got = {r["k"]: r["v"] for r in lh.read_table(spark, table).collect()}
     assert got == {1: "old", 2: "new"}
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
+    from martian_moments_spark.lakehouse import BUCKET_COL
     # layout migrated: every live file now carries a bucket dir
     assert all(
         lh._bucket_of(os.path.relpath(p, table), BUCKET_COL) is not None
@@ -459,7 +459,7 @@ def test_partial_compaction_rewrites_only_selected_buckets(spark, tmp_path):
     only the selected buckets' small files."""
     import hashlib
 
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
+    from martian_moments_spark.lakehouse import BUCKET_COL
 
     table = str(tmp_path / "t")
     # two merge batches -> each bucket holds >=2 small files

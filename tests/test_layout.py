@@ -92,135 +92,6 @@ def test_z_value_matches_reference_interleave(spark):
         assert got[(a, b)] == py_z(a, b), (a, b)
 
 
-def test_compact_small_files_plain(spark, tmp_path):
-    from martian_moments_spark.operators.layout import compact_small_files
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    path = str(tmp_path / "li_many")
-    li.repartition(20).write.parquet(path)  # simulate micro-batch accretion
-
-    stats = compact_small_files(spark, path, target_bytes=1 << 40)
-    assert stats["files_before"] == 20
-    assert stats["files_after"] == 1
-    after = spark.read.parquet(path)
-    assert after.count() == li.count()
-    assert sorted(after.columns) == sorted(li.columns)
-
-
-def test_compact_small_files_partitioned(spark, tmp_path):
-    import os
-
-    from martian_moments_spark.operators.layout import compact_small_files
-
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    path = str(tmp_path / "li_part")
-    li.repartition(10).write.partitionBy("l_returnflag").parquet(path)
-
-    stats = compact_small_files(
-        spark, path, target_bytes=1 << 40, partition_by=("l_returnflag",)
-    )
-    assert stats["files_after"] < stats["files_before"]
-    # partition directory layout survives compaction (pruning intact)
-    dirs = {d for d in os.listdir(path) if d.startswith("l_returnflag=")}
-    assert dirs == {"l_returnflag=A", "l_returnflag=N", "l_returnflag=R"}
-    after = spark.read.parquet(path)
-    assert after.count() == li.count()
-
-
-def _table_rows(spark, path):
-    return {tuple(r) for r in spark.read.parquet(path).select("id", "v").collect()}
-
-
-def test_compaction_recovery_rolls_forward_completed_swap(spark, tmp_path):
-    """Crash between the two swap renames (table renamed away, sealed
-    tmp not yet renamed in): recovery must finish the swap — the
-    compacted data becomes the table, the backup is dropped."""
-    import json
-    import shutil
-
-    from martian_moments_spark.operators.layout import (
-        COMPACT_MANIFEST,
-        _data_files,
-        recover_compaction,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
-    df.repartition(4).write.parquet(path)
-    rows = _table_rows(spark, path)
-
-    # Build what a finished compaction write looks like: sealed tmp.
-    tmp = path + ".__compact_tmp__"
-    spark.read.parquet(path).coalesce(1).write.parquet(tmp)
-    files = [
-        {"path": os.path.relpath(p, tmp), "size": os.path.getsize(p)}
-        for p in sorted(_data_files(tmp))
-    ]
-    with open(os.path.join(tmp, COMPACT_MANIFEST), "w") as f:
-        json.dump({"files": files}, f)
-    # Crash window: table already renamed to bak, tmp not yet swapped in.
-    os.rename(path, path + ".__compact_bak__")
-
-    assert recover_compaction(path) == "rolled_forward"
-    assert _table_rows(spark, path) == rows
-    assert not os.path.exists(path + ".__compact_bak__")
-    assert not os.path.exists(tmp)
-    assert len(_data_files(path)) == 1  # the compacted layout won
-
-
-def test_compaction_recovery_drops_unsealed_tmp(spark, tmp_path):
-    """A tmp without a valid manifest is an unfinished write: recovery
-    must drop it and keep (or restore) the original table."""
-    from martian_moments_spark.operators.layout import recover_compaction
-
-    path = str(tmp_path / "t")
-    df = spark.range(50).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    df.repartition(2).write.parquet(path)
-    rows = _table_rows(spark, path)
-
-    tmp = path + ".__compact_tmp__"
-    spark.read.parquet(path).coalesce(1).write.parquet(tmp)  # no manifest
-
-    assert recover_compaction(path) == "dropped_tmp"
-    assert not os.path.exists(tmp)
-    assert _table_rows(spark, path) == rows
-
-    # unsealed tmp AND table renamed away: roll back to the original
-    spark.read.parquet(path).coalesce(1).write.parquet(tmp)
-    os.rename(path, path + ".__compact_bak__")
-    assert recover_compaction(path) == "rolled_back"
-    assert _table_rows(spark, path) == rows
-    assert not os.path.exists(tmp)
-    assert not os.path.exists(path + ".__compact_bak__")
-
-
-def test_compaction_recovery_cleans_leftover_backup(spark, tmp_path):
-    """Crash after the swap but before backup cleanup: the new table
-    is live; recovery just drops the backup."""
-    import shutil
-
-    from martian_moments_spark.operators.layout import (
-        compact_small_files,
-        recover_compaction,
-    )
-
-    path = str(tmp_path / "t")
-    df = spark.range(50).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    df.repartition(2).write.parquet(path)
-    rows = _table_rows(spark, path)
-
-    shutil.copytree(path, path + ".__compact_bak__")
-    assert recover_compaction(path) == "dropped_bak"
-    assert not os.path.exists(path + ".__compact_bak__")
-    assert _table_rows(spark, path) == rows
-
-    # and a fresh compaction on the recovered table works end-to-end
-    stats = compact_small_files(spark, path, target_bytes=1 << 30)
-    assert stats["recovered"] == "clean"
-    assert stats["files_after"] == 1
-    assert _table_rows(spark, path) == rows
-
-
 def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
     """The point of z-ordering: parquet footer min/max stats must be
     able to skip files for a predicate on the NON-leading dimension,

@@ -3,6 +3,11 @@ classes and keep plan building to the Py4J calls it needs."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import py4j.clientserver
 import pyspark.errors.utils
 from pyspark.sql import functions as F
@@ -58,3 +63,38 @@ def test_column_building_skips_call_site_capture(spark, monkeypatch):
     monkeypatch.undo()
     # 35 commands with call-site capture on.
     assert len(sent) <= 5
+
+
+def test_python_workers_import_the_package_from_outside_the_checkout(tmp_path):
+    # A driver that finds the package through sys.path alone, started
+    # from a directory outside the checkout: the Python workers inherit
+    # neither, so a UDF that imports the package needs get_spark to put
+    # it on their path.
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        import pandas as pd
+        from pyspark.sql import functions as F
+        from martian_moments_spark.session import get_spark
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1)
+
+        @F.pandas_udf("string")
+        def package_name(s: pd.Series) -> pd.Series:
+            import martian_moments_spark
+            return s.map(lambda _: martian_moments_spark.__name__)
+
+        print(spark.range(1).select(package_name("id")).first()[0])
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip().splitlines()[-1] == "martian_moments_spark"

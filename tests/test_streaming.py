@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from martian_moments_spark import lakehouse as lh
 from martian_moments_spark.pipelines.medallion import (
     ENVELOPE_SCHEMA,
     build_gold_daily,
@@ -17,7 +18,7 @@ from martian_moments_spark.pipelines.medallion import (
     run_batch_medallion,
     write_bronze_envelopes,
 )
-from martian_moments_spark.streaming.sinks import append_parquet_sink, upsert_foreach_batch
+from martian_moments_spark.streaming.sinks import append_parquet_sink
 from martian_moments_spark.streaming.sources import file_json_stream
 from martian_moments_spark.streaming.windows import watermarked_tumbling_agg
 
@@ -64,7 +65,7 @@ def test_foreach_batch_upsert_last_writer_wins(spark, tmp_path):
     versions must win; non-overlapping rows must survive (E8)."""
     src = tmp_path / "src"
     src.mkdir()
-    target = str(tmp_path / "target.parquet")
+    target = str(tmp_path / "target")
 
     def write_file(name, rows):
         with open(src / name, "w") as f:
@@ -75,64 +76,23 @@ def test_foreach_batch_upsert_last_writer_wins(spark, tmp_path):
     # batch 1: keys 1..4 v='old'; batch 2: keys 3..6 v='new'
     write_file("b1.json", [{"k": k, "v": "old", "seq": 1} for k in range(1, 5)])
     stream = file_json_stream(spark, str(src), schema)
-    q = upsert_foreach_batch(stream, target, str(tmp_path / "ck1"), keys=["k"], order_col="seq")
+    q = lh.upsert_sink(stream, target, str(tmp_path / "ck1"), keys=["k"], order_col="seq")
     q.awaitTermination(120)
 
     write_file("b2.json", [{"k": k, "v": "new", "seq": 2} for k in range(3, 7)])
-    q = upsert_foreach_batch(stream, target, str(tmp_path / "ck1"), keys=["k"], order_col="seq")
+    q = lh.upsert_sink(stream, target, str(tmp_path / "ck1"), keys=["k"], order_col="seq")
     q.awaitTermination(120)
 
-    final = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    final = {r["k"]: r["v"] for r in lh.read_table(spark, target).collect()}
     assert final == {1: "old", 2: "old", 3: "new", 4: "new", 5: "new", 6: "new"}
-    markers = [p for p in os.listdir(tmp_path) if p.startswith("_load_complete")]
-    assert markers, "load-complete control record missing (E9)"
+    # the load-complete record (E9) is each batch's commit entry
+    ops = [r["op"] for r in lh.table_history(spark, target).collect()]
+    assert ops == ["merge", "merge"], ops
 
-
-def test_partitioned_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """Dynamic-partition-overwrite merge: a batch touching a subset of
-    hash buckets must leave every other bucket's files byte-identical
-    (same names, same bytes) — the partition-scoped MERGE contract."""
-    import hashlib
-
-    from martian_moments_spark.streaming.sinks import BUCKET_COL, partitioned_upsert
-
-    target = str(tmp_path / "merge_target")
-    base = spark.createDataFrame(
-        [(k, "old", 1) for k in range(1, 41)], "k BIGINT, v STRING, seq BIGINT"
-    )
-    assert partitioned_upsert(base, target, keys=["k"], order_col="seq", num_buckets=8) == 40
-
-    def snapshot():
-        out = {}
-        for root, _, files in os.walk(target):
-            for name in files:
-                if name.endswith(".parquet"):
-                    p = os.path.join(root, name)
-                    with open(p, "rb") as f:
-                        out[os.path.relpath(p, target)] = hashlib.sha256(f.read()).hexdigest()
-        return out
-
-    before = snapshot()
-    assert len({p.split("/")[0] for p in before}) == 8  # all 8 buckets populated
-
-    delta = spark.createDataFrame(
-        [(3, "new", 2), (4, "new", 2), (99, "new", 2)], "k BIGINT, v STRING, seq BIGINT"
-    )
-    assert partitioned_upsert(delta, target, keys=["k"], order_col="seq", num_buckets=8) > 0
-
-    touched = {
-        f"{BUCKET_COL}={r[0]}"
-        for r in delta.selectExpr(f"cast(pmod(xxhash64(k), 8) as int)").distinct().collect()
-    }
-    after = snapshot()
-    untouched_before = {p: h for p, h in before.items() if p.split("/")[0] not in touched}
-    untouched_after = {p: h for p, h in after.items() if p.split("/")[0] not in touched}
-    assert untouched_before == untouched_after, "untouched bucket files were rewritten"
-    assert any(p.split("/")[0] in touched for p in after)
-
-    final = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
-    expected = {k: "old" for k in range(1, 41)} | {3: "new", 4: "new", 99: "new"}
-    assert final == expected
+    # a restart with no new input commits no version
+    q = lh.upsert_sink(stream, target, str(tmp_path / "ck1"), keys=["k"], order_col="seq")
+    q.awaitTermination(120)
+    assert lh.current_version(target) == 1
 
 
 def test_watermark_drops_late_rows(spark, tmp_path):
@@ -901,8 +861,9 @@ def test_streaming_medallion_sf1_kill_restart_exactly_once(spark, tmp_path):
     """The reference's full load path (snowflake_load_dag.py:41-60) at
     sf1 volume with TWO injected crashes: 1M events as 100 JSONL
     envelopes stream through file_json_stream -> bronze parquet append
-    (file-sink transaction log) -> streamed flatten -> foreachBatch
-    keyed silver upsert + load-complete markers. Each stage is stopped
+    (file-sink transaction log) -> streamed flatten -> keyed silver
+    upsert into a lakehouse table (one commit per batch, the
+    load-complete record). Each stage is stopped
     mid-run AND has its newest commit marker deleted, so the restart
     replays a batch whose outputs already landed: the file sink must
     skip the replayed batch via its _spark_metadata log, and the
@@ -939,7 +900,7 @@ def test_streaming_medallion_sf1_kill_restart_exactly_once(spark, tmp_path):
             .option("maxFilesPerTrigger", "8")
             .parquet(bronze)
         )
-        return upsert_foreach_batch(
+        return lh.upsert_sink(
             flatten_envelopes(stream),
             silver,
             ck_b,
@@ -954,10 +915,8 @@ def test_streaming_medallion_sf1_kill_restart_exactly_once(spark, tmp_path):
     assert q.awaitTermination(600)
 
     # ---- exactly-once: streamed silver == batch flatten ------------
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
-
     expected = flatten_envelopes(spark.read.schema(ENVELOPE_SCHEMA).json(envel))
-    got = spark.read.parquet(silver).drop(BUCKET_COL)
+    got = lh.read_table(spark, silver)
 
     assert got.count() == 1_000_000
     assert got.select("event_id").distinct().count() == 1_000_000
@@ -967,17 +926,15 @@ def test_streaming_medallion_sf1_kill_restart_exactly_once(spark, tmp_path):
     )
     assert expected.exceptAll(got.select(cols)).count() == 0, "rows lost across restart"
 
-    # load-complete markers: one per distinct committed batch id (the
-    # replayed batch overwrites its own marker, never doubles it)
-    markers = [
-        f for f in os.listdir(os.path.dirname(silver)) if f.startswith("_load_complete_")
-    ]
-    batch_ids = {int(f.split("_")[-1].split(".")[0]) for f in markers}
-    assert len(markers) == len(batch_ids) >= 2
-    total_marked = sum(
-        json.load(open(os.path.join(os.path.dirname(silver), f)))["rows"] for f in markers
-    )
-    assert total_marked >= 1_000_000  # replays re-report merged counts
+    # load-complete records: one merge commit per micro-batch (the
+    # replayed batch commits again, absorbed by the keyed merge)
+    ops = [r["op"] for r in lh.table_history(spark, silver).collect()]
+    assert ops.count("merge") >= 2 and set(ops) == {"merge"}, ops
+
+    # a restart with no new input commits no version
+    v = lh.current_version(silver)
+    assert run_b().awaitTermination(600)
+    assert lh.current_version(silver) == v
 
 
 @pytest.mark.skipif(
@@ -1067,7 +1024,7 @@ def test_compaction_during_sf1_streaming_upsert_snapshot_isolated(spark, tmp_pat
     assert min(compact_versions) < max(merge_versions), hist
 
     # exactly-once under interference: final state == batch flatten
-    from martian_moments_spark.streaming.sinks import BUCKET_COL
+    from martian_moments_spark.lakehouse import BUCKET_COL
 
     expected = flatten_envelopes(spark.read.schema(ENVELOPE_SCHEMA).json(envel))
     got = lh.read_table(spark, table).drop(BUCKET_COL)

@@ -39,9 +39,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.types import MapType  # noqa: E402
-
+from bench import consume  # noqa: E402
 from martian_moments_spark.plans import load_all  # noqa: E402
 from martian_moments_spark.session import get_spark  # noqa: E402
 
@@ -65,14 +63,6 @@ FAMILIES: list[tuple[str, str]] = [
     ("streaming window agg", "tumbling_window_agg"),
     ("multimodal decode", "multimodal_jpeg_decode"),
 ]
-
-
-def consume(df) -> None:
-    cols = [
-        F.to_json(F.col(f.name)) if isinstance(f.dataType, MapType) else F.col(f.name)
-        for f in df.schema.fields
-    ]
-    df.select(F.xxhash64(*cols).alias("__h")).agg(F.bit_xor("__h")).collect()
 
 
 def _rest(base: str, path: str):
