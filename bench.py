@@ -34,16 +34,17 @@ from martian_moments_spark.plans import load_all  # noqa: E402
 from martian_moments_spark.session import default_parallelism, get_spark  # noqa: E402
 
 
-def consume(df) -> None:
+def consume(df) -> int | None:
     """Materialize every output column: hash each row's full width to
     one value, XOR the hashes to a scalar (overflow-free under ANSI
-    mode). Nothing prunes — the result depends on every column — and
-    nothing large returns to the driver."""
+    mode) and return it (None for an empty result). Nothing prunes —
+    the result depends on every column — and nothing large returns to
+    the driver."""
     cols = [
         F.to_json(F.col(f.name)) if isinstance(f.dataType, MapType) else F.col(f.name)
         for f in df.schema.fields
     ]
-    df.select(F.xxhash64(*cols).alias("__h")).agg(F.bit_xor("__h")).collect()
+    return df.select(F.xxhash64(*cols).alias("__h")).agg(F.bit_xor("__h")).collect()[0][0]
 
 
 def prior_timings(lines, sf: str, cpus: int) -> tuple[dict[str, list[float]], dict[str, list[float]]]:
@@ -51,17 +52,9 @@ def prior_timings(lines, sf: str, cpus: int) -> tuple[dict[str, list[float]], di
     (median lineage, best lineage). Only rows of the same sf AND the
     same core count feed the gate: an 8-core run read against 32-core
     history is a hardware difference, not a regression. Rows written
-    before ``cpus`` was recorded never gate.
-
-    Lineage discipline (ADVICE r10): records written before the r10
-    estimator switch hold BEST-OF times in "queries"; since r10 they
-    hold medians and carry a separate "best" map. Comparing a median
-    against a history dominated by best-of rows is biased toward false
-    regression flags (median sits systematically above best-of), so
-    median-era rows feed the median lineage, and old "queries" values
-    (best-of by construction) plus median-era "best" maps feed the
-    best lineage.
-    """
+    before ``cpus`` was recorded never gate. Every row that gates was
+    written by the current estimator, so medians come from "queries"
+    and bests from "best"."""
     prior_med: dict[str, list[float]] = {}
     prior_best: dict[str, list[float]] = {}
     for line in lines:
@@ -71,11 +64,9 @@ def prior_timings(lines, sf: str, cpus: int) -> tuple[dict[str, list[float]], di
             continue
         if str(rec.get("sf")) != sf or rec.get("cpus") != cpus:
             continue
-        median_era = rec.get("passes") == "median-of-3-to-5"
-        if median_era:
-            for q, t in rec.get("queries", {}).items():
-                prior_med.setdefault(q, []).append(t)
-        for q, t in (rec.get("best") or (rec.get("queries") if not median_era else {}) or {}).items():
+        for q, t in rec.get("queries", {}).items():
+            prior_med.setdefault(q, []).append(t)
+        for q, t in rec.get("best", {}).items():
             prior_best.setdefault(q, []).append(t)
     return prior_med, prior_best
 
@@ -185,8 +176,7 @@ def main() -> None:
     # minimum ratchets low and flags ±40% machine noise every run).
     # Ratios > 1.5x with > 0.3 s absolute delta are reported in the JSON
     # line itself — regressions were previously only findable by
-    # hand-diffing BENCH_r{N}.json files. ``prior_timings`` keeps the
-    # median and best-of lineages apart.
+    # hand-diffing BENCH_r{N}.json files.
     hist_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl")
     cpus = default_parallelism()
     history: list[str] = []

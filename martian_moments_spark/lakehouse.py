@@ -331,6 +331,28 @@ def read_table_asof(spark: SparkSession, table: str, ts: float) -> DataFrame:
     return read_table(spark, table, version=version_asof(table, ts))
 
 
+def _range_candidates(table: str, base: int, col: str, lo, hi) -> list[str]:
+    """The live files of version ``base`` that can hold a row with
+    ``lo <= col <= hi``, judged from the manifest alone (no footer is
+    opened): a file whose committed [min, max] for ``col`` misses
+    [lo, hi], or that committed zero rows, is skipped. A file without
+    committed stats is never skipped, so correctness does not depend
+    on stats coverage."""
+    stats = file_stats(table, base)
+    keep = []
+    for p in snapshot_files(table, base):
+        st = stats.get(_stored_path(table, p))
+        if st is not None:
+            if st.get("rows") == 0:
+                continue
+            if col in st["min"] and col in st["max"] and (
+                st["max"][col] < lo or st["min"][col] > hi
+            ):
+                continue
+        keep.append(p)
+    return keep
+
+
 def read_table_pruned(
     spark: SparkSession,
     table: str,
@@ -353,22 +375,14 @@ def read_table_pruned(
     from pyspark.sql import functions as F
 
     v = current_version(table) if version is None else version
+    keep = _range_candidates(table, v, col, lo, hi)
+    if keep:
+        return _read_files(spark, table, keep, v).filter(F.col(col).between(lo, hi))
+    # preserve the schema: read nothing via an always-false filter
     files = snapshot_files(table, v)
-    stats = file_stats(table, v)
-    keep = []
-    for p in files:
-        st = stats.get(_stored_path(table, p))
-        if st is not None and col in st["min"] and col in st["max"]:
-            if st["max"][col] < lo or st["min"][col] > hi:
-                continue
-        keep.append(p)
-    if not keep:
-        # preserve the schema: read nothing via an always-false filter
-        # (never happens on a non-empty intersection)
-        if not files:
-            return _empty_snapshot(spark, table, v)
-        return _read_files(spark, table, files, v).filter(F.lit(False))
-    return _read_files(spark, table, keep, v).filter(F.col(col).between(lo, hi))
+    if not files:
+        return _empty_snapshot(spark, table, v)
+    return _read_files(spark, table, files, v).filter(F.lit(False))
 
 
 def _stage_data(
@@ -856,19 +870,7 @@ def delete_where(
         base = current_version(table)
         if base is None:
             raise FileNotFoundError(f"no committed version in {table!r}")
-        files = snapshot_files(table, base)
-        stats = file_stats(table, base)
-        candidates = []
-        for p in files:
-            st = stats.get(_stored_path(table, p))
-            if st is not None:
-                if st.get("rows") == 0:
-                    continue  # empty file: nothing to delete, carry over
-                if col in st["min"] and col in st["max"] and (
-                    st["max"][col] < lo or st["min"][col] > hi
-                ):
-                    continue  # cannot hold a matching row: carry over
-            candidates.append(p)
+        candidates = _range_candidates(table, base, col, lo, hi)
         if not candidates:
             return base
         survivors = _read_files(spark, table, candidates, base).filter(
@@ -910,19 +912,7 @@ def update_where(
         base = current_version(table)
         if base is None:
             raise FileNotFoundError(f"no committed version in {table!r}")
-        files = snapshot_files(table, base)
-        stats = file_stats(table, base)
-        candidates = []
-        for p in files:
-            st = stats.get(_stored_path(table, p))
-            if st is not None:
-                if st.get("rows") == 0:
-                    continue
-                if col in st["min"] and col in st["max"] and (
-                    st["max"][col] < lo or st["min"][col] > hi
-                ):
-                    continue
-            candidates.append(p)
+        candidates = _range_candidates(table, base, col, lo, hi)
         if not candidates:
             return base
         matched = F.col(col).between(lo, hi)

@@ -34,7 +34,10 @@ Model — every step integer or IEEE-exact, no training iterations
   is the child id.
 
 Search over the routed cells reuses the flat path's kernels
-(``topk_units_cells_pandas``) unchanged — same output schema.
+(``topk_units_cells_pandas``) unchanged — same output schema. Routing
+uses the flat path's exact primitives too: ``_argmin_cells`` for
+single-cell routing and ``_nearest_cells`` for the multi-probe ranking,
+both with lowest-id ties.
 
 Scale: the seed collect is k rows of dim int64 (bounded metadata,
 the kmeans_units pattern); routing is one mapInPandas streaming pass
@@ -52,34 +55,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from martian_moments_spark.llmops.similarity import (
-    _gram_f64,
+    _argmin_cells,
+    _nearest_cells,
+    _units_matrix,
     with_units_and_norm,
 )
 from martian_moments_spark.llmops.textops import portable_hash31
-
-
-def _argmin_rows(U, C, chunk: int = 1024):
-    """Row-wise exact-int64-distance argmin of U against centroid set
-    C, ties to the lowest index — the _argmin_cells contract with
-    positional ids, chunked over C for bounded temporaries."""
-    import numpy as np
-
-    un = np.einsum("ij,ij->i", U, U)
-    best_d = None
-    best_j = None
-    for s in range(0, len(C), chunk):
-        Cc = C[s : s + chunk]
-        cn = np.einsum("ij,ij->i", Cc, Cc)
-        d = un[:, None] + cn[None, :] - 2 * _gram_f64(U, Cc)
-        j = d.argmin(axis=1)
-        dj = d[np.arange(len(U)), j]
-        if best_d is None:
-            best_d, best_j = dj, s + j
-        else:
-            upd = dj < best_d
-            best_d = np.where(upd, dj, best_d)
-            best_j = np.where(upd, s + j, best_j)
-    return best_j
 
 
 def _hier_model(base: DataFrame, k: int, id_col: str = "vec_id"):
@@ -97,11 +78,11 @@ def _hier_model(base: DataFrame, k: int, id_col: str = "vec_id"):
         .select("units")
         .collect()
     )
-    S = np.stack([np.asarray(r[0], dtype=np.int64) for r in seed_rows])
+    S = _units_matrix(r[0] for r in seed_rows)
     k_eff = len(S)
     k1 = max(1, int(math.floor(math.sqrt(k_eff))))
     P = S[:k1]
-    child_parent = _argmin_rows(S, P)
+    child_parent = _argmin_cells(S, P, np.arange(k1))
     live = np.unique(child_parent)  # parents that own >= 1 child (all, absent dup seeds)
     P_live = P[live]
     children_of = {int(p): np.flatnonzero(child_parent == p) for p in live}
@@ -127,13 +108,13 @@ def hier_route_units(df: DataFrame, k: int, id_col: str = "vec_id", emb_col: str
             if len(pdf) == 0:
                 yield pdf.assign(cell=pd.Series([], dtype="int32"))
                 continue
-            U = np.stack([np.asarray(u, dtype=np.int64) for u in pdf["units"]])
-            p_idx = live[_argmin_rows(U, P_live)]
+            U = _units_matrix(pdf["units"])
+            p_idx = _argmin_cells(U, P_live, live)
             cell = np.empty(len(U), dtype=np.int64)
             for p in np.unique(p_idx):
                 rows = np.flatnonzero(p_idx == p)
                 kids = children_of[int(p)]
-                cell[rows] = kids[_argmin_rows(U[rows], S[kids])]
+                cell[rows] = _argmin_cells(U[rows], S[kids], kids)
             yield pdf.assign(cell=cell.astype("int32"))
 
     schema = f"{id_col} BIGINT, units ARRAY<BIGINT>, norm2 BIGINT, cell INT"
@@ -179,20 +160,13 @@ def hier_probe_route_units(
     def fn(batches):
         import pandas as pd
 
-        pn = np.einsum("ij,ij->i", P_live, P_live)
         for pdf in batches:
             if len(pdf) == 0:
                 yield pdf.assign(probe_cells=pd.Series([], dtype=object))
                 continue
-            U = np.stack([np.asarray(u, dtype=np.int64) for u in pdf["units"]])
-            un = np.einsum("ij,ij->i", U, U)
-            dp = un[:, None] + pn[None, :] - 2 * _gram_f64(U, P_live)
-            # top parents by (distance, parent id) — lexsort keys are
-            # applied last-key-primary, so distance wins, id breaks ties
-            ordp = np.lexsort(
-                (np.broadcast_to(live, dp.shape), dp), axis=1
-            )[:, :np_par]
-            sel = np.sort(live[ordp], axis=1)  # (m, np_par) parent ids
+            U = _units_matrix(pdf["units"])
+            # (m, np_par) nearest parent ids, as a sorted set per row
+            sel = np.sort(_nearest_cells(U, P_live, live, np_par), axis=1)
             probes = [None] * len(U)
             combos, inv = np.unique(sel, axis=0, return_inverse=True)
             for ci in range(len(combos)):
@@ -200,19 +174,9 @@ def hier_probe_route_units(
                 kids = np.unique(
                     np.concatenate([children_of[int(p)] for p in combos[ci]])
                 )
-                C = S[kids]
-                cn = np.einsum("ij,ij->i", C, C)
-                d = (
-                    un[rows][:, None]
-                    + cn[None, :]
-                    - 2 * _gram_f64(U[rows], C)
-                )
-                take = min(n_probe, len(kids))
-                ordc = np.lexsort(
-                    (np.broadcast_to(kids, d.shape), d), axis=1
-                )[:, :take]
+                near = _nearest_cells(U[rows], S[kids], kids, min(n_probe, len(kids)))
                 for r, row in enumerate(rows):
-                    probes[row] = kids[ordc[r]].astype("int64")
+                    probes[row] = near[r].astype("int64")
             yield pdf.assign(probe_cells=probes)
 
     schema = (

@@ -34,21 +34,13 @@ exact, and engine-owned.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from martian_moments_spark import lakehouse as lh
-
-#: Phase-2 merges for decomposable aggregates (same table as
-#: operators.skew.MERGES — count partials merge by SUM; avg must be
-#: carried as (sum, count) and divided at read time).
-MERGES: dict[str, Callable[[Column], Column]] = {
-    "sum": F.sum,
-    "min": F.min,
-    "max": F.max,
-}
+from martian_moments_spark.operators.skew import MERGES, check_merges
 
 
 class MaterializedRollup:
@@ -56,8 +48,10 @@ class MaterializedRollup:
     maintained incrementally against a lakehouse source table.
 
     ``aggs`` maps output column -> (phase1 expression, merge name from
-    MERGES). The merge is explicit because it cannot be inferred (a
-    count partial merges by sum; averaging averages is wrong)."""
+    ``operators.skew.MERGES``). The merge is explicit because it cannot
+    be inferred (a count partial merges by sum; averaging averages is
+    wrong): an avg is carried as (sum, count) and divided at read
+    time."""
 
     def __init__(
         self,
@@ -66,17 +60,7 @@ class MaterializedRollup:
         keys: Sequence[str],
         aggs: dict[str, tuple[Column, str]],
     ) -> None:
-        for name, spec in aggs.items():
-            if not (isinstance(spec, tuple) and len(spec) == 2):
-                raise TypeError(
-                    f"aggs[{name!r}] must be (phase1_expr, merge_name)"
-                )
-            if spec[1] not in MERGES:
-                raise ValueError(
-                    f"aggs[{name!r}]: unknown merge {spec[1]!r} "
-                    f"(supported: {sorted(MERGES)}); non-decomposable "
-                    "aggregates cannot be maintained incrementally"
-                )
+        check_merges(aggs)
         self.source_table = source_table
         self.rollup_table = rollup_table
         self.keys = list(keys)

@@ -78,6 +78,24 @@ def salted_join(
 MERGES: dict[str, object] = {"sum": F.sum, "min": F.min, "max": F.max}
 
 
+def check_merges(aggs: dict[str, tuple[Column, str]]) -> None:
+    """Reject an ``aggs`` spec whose phase-2 merge is missing or not in
+    ``MERGES``: the merge cannot be inferred safely, so a bare
+    expression or an unknown name raises rather than guessing."""
+    for name, spec in aggs.items():
+        if not (isinstance(spec, tuple) and len(spec) == 2):
+            raise TypeError(
+                f"aggs[{name!r}] must be (phase1_expr, merge_name); "
+                f"got {type(spec).__name__} — the phase-2 merge is explicit"
+            )
+        if spec[1] not in MERGES:
+            raise ValueError(
+                f"aggs[{name!r}]: unknown merge {spec[1]!r} "
+                f"(supported: {sorted(MERGES)}); non-decomposable aggregates "
+                "(avg, count distinct, percentiles) have no phase-2 merge"
+            )
+
+
 def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -100,18 +118,7 @@ def salted_agg(
     The salt is deterministic (hash of ``salt_source`` or a stable row
     fingerprint, never rand()) so retries/speculation don't re-deal
     rows — the same determinism rule as everywhere in this engine."""
-    for name, spec in aggs.items():
-        if not (isinstance(spec, tuple) and len(spec) == 2):
-            raise TypeError(
-                f"aggs[{name!r}] must be (phase1_expr, merge_name); "
-                f"got {type(spec).__name__} — the phase-2 merge is explicit"
-            )
-        if spec[1] not in MERGES:
-            raise ValueError(
-                f"aggs[{name!r}]: unknown merge {spec[1]!r} "
-                f"(supported: {sorted(MERGES)}); non-decomposable aggregates "
-                "(avg, count distinct, percentiles) cannot be salted this way"
-            )
+    check_merges(aggs)
     salt = (
         F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts))
         if salt_source

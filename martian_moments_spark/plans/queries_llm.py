@@ -51,7 +51,6 @@ from martian_moments_spark.llmops.similarity import (
     sql_kmeans_ctes,
     topk_cosine,
     topk_cosine_blocked,
-    topk_cosine_cells_pandas,
     topk_units_cells_filtered_pandas,
     topk_units_cells_pandas,
     topk_units_probed,

@@ -97,11 +97,13 @@ def test_frame_sample_only_videos(spark):
 
 
 def test_ivf_pandas_matmul_equals_jvm_formulation(spark):
-    """The numpy int64-matmul IVF path must be BIT-identical to the
-    pure-JVM fixed-point formulation — same integers, same doubles."""
+    """The numpy IVF search kernel must be BIT-identical to the pure-JVM
+    fixed-point formulation over the same cells — same integers, same
+    doubles."""
     from martian_moments_spark.llmops.similarity import (
         topk_cosine,
-        topk_cosine_cells_pandas,
+        topk_units_cells_pandas,
+        with_units_and_norm,
     )
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -109,9 +111,12 @@ def test_ivf_pandas_matmul_equals_jvm_formulation(spark):
         (r["id_a"], r["rank"]): (r["id_b"], r["cosine"])
         for r in topk_cosine(emb, k=5, cell_col="label").collect()
     }
+    assigned = with_units_and_norm(emb).select(
+        "vec_id", "units", F.col("label").alias("cell")
+    )
     np_ = {
         (r["id_a"], r["rank"]): (r["id_b"], r["cosine"])
-        for r in topk_cosine_cells_pandas(emb, k=5).collect()
+        for r in topk_units_cells_pandas(assigned, k=5).collect()
     }
     assert jvm == np_
 
@@ -269,8 +274,8 @@ def test_chunked_topk_never_emits_self_on_zero_norm_input(spark):
     the DuckDB oracle's a.vec_id <> b.vec_id — and leave clean-input
     results untouched (covered by the bit-identity test above)."""
     from martian_moments_spark.llmops.similarity import (
-        topk_cosine_cells_pandas,
         topk_units_cells_pandas,
+        with_units_and_norm,
     )
 
     # 4 vectors in one cell, one of them all-zero (NaN cosine vs all)
@@ -283,25 +288,50 @@ def test_chunked_topk_never_emits_self_on_zero_norm_input(spark):
     emb = spark.createDataFrame(
         rows, "vec_id LONG, embedding ARRAY<DOUBLE>, label INT"
     )
-    got = topk_cosine_cells_pandas(emb, k=3, cell_col="label").collect()
+    assigned = with_units_and_norm(emb).select(
+        "vec_id", "units", F.col("label").alias("cell")
+    )
+    got = topk_units_cells_pandas(assigned, k=3).collect()
     assert got, "kernel emitted nothing"
     assert all(r["id_a"] != r["id_b"] for r in got), [
         (r["id_a"], r["id_b"]) for r in got if r["id_a"] == r["id_b"]
     ]
 
-    # same property through the units-based kernel (IVF search stage)
-    from pyspark.sql import functions as F
 
-    assigned = emb.select(
-        "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x * 1000000).cast("long")
-        ).alias("units"),
-        F.col("label").cast("int").alias("cell"),
-    )
-    got_u = topk_units_cells_pandas(assigned, k=3).collect()
-    assert got_u, "units kernel emitted nothing"
-    assert all(r["id_a"] != r["id_b"] for r in got_u)
+def test_blocked_topk_pins_rows_on_zero_norm_input(spark):
+    """topk_cosine_blocked on input with a zero-norm vector (NaN
+    cosines, which the final window ranks differently from numpy): each
+    block emits its top k+1 in numpy order minus self, so the answer is
+    exactly these rows, pinned from the per-row lexsort form."""
+    from martian_moments_spark.llmops.similarity import topk_cosine_blocked
+
+    rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0]),
+        (3, [0.0, 0.0, 0.0]),  # zero-norm
+        (4, [0.0, 1.0, 0.0]),
+        (5, [0.5, 0.5, 0.0]),
+        (6, [0.0, 0.0, 1.0]),
+        (7, [0.5, 0.5, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    got = sorted(tuple(r) for r in topk_cosine_blocked(emb, k=2, n_blocks=2).collect())
+    assert got == [
+        (1, 2, 0.993883734673619, 1),
+        (1, 5, 0.7071067811865476, 2),
+        (2, 1, 0.993883734673619, 1),
+        (2, 5, 0.7808688094430304, 2),
+        (3, 1, None, 1),
+        (3, 2, None, 2),
+        (4, 5, 0.7071067811865476, 1),
+        (4, 7, 0.7071067811865476, 2),
+        (5, 2, 0.7808688094430304, 2),
+        (5, 7, 1.0000000000000002, 1),
+        (6, 1, 0.0, 1),
+        (6, 2, 0.0, 2),
+        (7, 2, 0.7808688094430304, 2),
+        (7, 5, 1.0000000000000002, 1),
+    ]
 
 
 def test_tokenizer_edge_cases(spark):

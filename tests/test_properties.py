@@ -1638,3 +1638,141 @@ def test_perceptron_separates_planted_gibberish(gibberish):
     assert all(s > 0 for s in scores[:3]), scores
     assert all(s <= 0 for s in scores[3:]), scores
     assert max(scores[3:]) < min(scores[:3])
+
+
+small_units = st.lists(
+    st.lists(st.integers(-2, 2), min_size=3, max_size=3), min_size=1, max_size=10
+)
+
+
+def _ref_cos(a, b):
+    """The fixed-point cosine in plain Python: integer dot and squared
+    norms, one division by the product of square roots; NaN on a
+    zero-norm side."""
+    import math
+
+    na = sum(int(x) * int(x) for x in a)
+    nb = sum(int(x) * int(x) for x in b)
+    if na == 0 or nb == 0:
+        return math.nan
+    dot = sum(int(x) * int(y) for x, y in zip(a, b))
+    return float(dot) / (math.sqrt(float(na)) * math.sqrt(float(nb)))
+
+
+def _ref_topk(qu, cu, k, valid, take):
+    """Per query row: order the candidates by (NaN last, cosine DESC,
+    column) with masked pairs at -inf, take the first ``take``, keep the
+    valid ones, cut at ``k``; (row, col, cosine, rank) tuples."""
+    import math
+
+    out = []
+    for i in range(len(qu)):
+        order = []
+        for j in range(len(cu)):
+            cs = _ref_cos(qu[i], cu[j])
+            ok = valid is None or valid[0][i] != valid[1][j]
+            v = cs if ok else -math.inf
+            order.append(((math.isnan(v), 0.0 if math.isnan(v) else -v, j), j, ok, cs))
+        order.sort()
+        kept = [(j, cs) for _, j, ok, cs in order[:take] if ok][:k]
+        out += [(i, j, cs, rank) for rank, (j, cs) in enumerate(kept, start=1)]
+    return out
+
+
+def _ref_first(u, tau):
+    return [
+        next((i for i in range(j) if _ref_cos(u[i], u[j]) >= tau), -1)
+        for j in range(len(u))
+    ]
+
+
+def _assert_topk(got_arrays, want):
+    import math
+
+    got = list(zip(*(a.tolist() for a in got_arrays)))
+    assert len(got) == len(want)
+    for (gi, gj, gc, gr), (wi, wj, wc, wr) in zip(got, want):
+        assert (gi, gj, gr) == (wi, wj, wr)
+        assert gc == wc or (math.isnan(gc) and math.isnan(wc))
+
+
+@given(
+    q=small_units,
+    c=small_units,
+    k=st.integers(0, 4),
+    spare=st.booleans(),
+    mask=st.sampled_from(["none", "self", "id", "label", "cand"]),
+    labels=st.lists(st.integers(0, 2), min_size=10, max_size=10),
+    tau=st.sampled_from([-1.0, 0.0, 0.5, 0.9, 1.0]),
+)
+@settings(max_examples=200, deadline=None)
+def test_vector_primitives_match_bruteforce(q, c, k, spare, mask, labels, tau):
+    """The shared exact vector primitives of llmops.similarity against
+    plain-Python references on small integer matrices: the cosine top-k
+    (ties to the lower column, NaN rows of all-zero vectors last, masked
+    pairs at -inf before selection and dropped after it, cut at k), the
+    first earlier tau hit, and the nearest-centroid ranking with tied
+    distances going to the lower id."""
+    import numpy as np
+
+    from martian_moments_spark.llmops.similarity import (
+        _argmin_cells,
+        _cosine_topk,
+        _first_earlier_hit,
+        _nearest_cells,
+    )
+
+    qu = np.array(q, dtype=np.int64)
+    cu = qu if mask in ("self", "label") else np.array(c, dtype=np.int64)
+    n, m = len(qu), len(cu)
+    pos = np.arange(n)
+    lab = np.array(labels[:n])
+    ids = np.arange(m) * 2  # candidate ids ascend with the column
+    valid = {
+        "none": None,
+        "self": (pos, pos),
+        "label": (lab, lab),
+        "id": (pos * 3, ids),  # some query ids collide with candidate ids
+        "cand": (pos * 2 + 1, ids),  # odd query ids never collide
+    }[mask]
+    if spare or k == 0:  # the default selection: k + 1
+        got = _cosine_topk(qu, cu, k, valid)
+        take = k + 1
+    else:
+        got = _cosine_topk(qu, cu, k, valid, take=k)
+        take = k
+    _assert_topk(got, _ref_topk(qu, cu, k, valid, take))
+    assert _first_earlier_hit(qu, tau).tolist() == _ref_first(qu, tau)
+
+    # centroids: the candidate rows, some duplicated (tied distances),
+    # under ids that do not ascend with the row
+    C = np.concatenate([cu, cu[:2]])
+    cell_ids = np.random.default_rng(len(C)).permutation(len(C)) * 5
+    for t in (1, 2, len(C)):
+        near = [
+            [
+                cid
+                for _, cid in sorted(
+                    (int(((qu[i] - C[r]) ** 2).sum()), int(cell_ids[r]))
+                    for r in range(len(C))
+                )[:t]
+            ]
+            for i in range(n)
+        ]
+        assert _nearest_cells(qu, C, cell_ids, t).tolist() == near
+    o = np.argsort(cell_ids)
+    assert _argmin_cells(qu, C[o], cell_ids[o]).tolist() == [r[0] for r in near]
+
+
+def test_vector_primitives_across_chunk_boundaries():
+    """600 rows span two 512-row chunks: the top-k and the first
+    earlier hit must still equal the plain-Python references (a later
+    chunk never overwrites an earlier hit; row offsets carry over)."""
+    import numpy as np
+
+    from martian_moments_spark.llmops.similarity import _cosine_topk, _first_earlier_hit
+
+    u = np.random.default_rng(5).integers(-2, 3, size=(600, 3))
+    pos = np.arange(len(u))
+    _assert_topk(_cosine_topk(u, u, 2, (pos, pos)), _ref_topk(u, u, 2, (pos, pos), 3))
+    assert _first_earlier_hit(u, 0.9).tolist() == _ref_first(u, 0.9)

@@ -684,13 +684,6 @@ def run_embdecade_smoke() -> None:
     load_all()
     spark = get_spark(app_name="mm-scale-embdecade")
 
-    def hash_consume(df):
-        from pyspark.sql import functions as F
-
-        return df.select(F.xxhash64(*df.columns).alias("__h")).agg(
-            F.bit_xor("__h")
-        ).collect()[0][0]
-
     results: dict[str, dict] = {}
     balance: dict[str, dict] = {}
     from martian_moments_spark.llmops.similarity import K_CELLS
@@ -754,8 +747,8 @@ def run_embdecade_smoke() -> None:
 
     # determinism double-hash at 5M (same session, two full executions)
     idx100 = spark.read.parquet(os.path.join(EMB100_DIR, "ivf_index.parquet"))
-    h1 = hash_consume(topk_units_cells_pandas(idx100, k=5))
-    h2 = hash_consume(topk_units_cells_pandas(idx100, k=5))
+    h1 = consume(topk_units_cells_pandas(idx100, k=5))
+    h2 = consume(topk_units_cells_pandas(idx100, k=5))
     determinism = {"hash1": h1, "hash2": h2, "equal": h1 == h2}
     assert h1 == h2, determinism
 
