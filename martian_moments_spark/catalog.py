@@ -176,10 +176,3 @@ def table_rows(sf_dir: str, name: str) -> int | None:
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
         return None
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register every table as a temp view so plans can be written in
-    Spark SQL (same Catalyst plan as the DataFrame API)."""
-    for name in names:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -8,7 +8,10 @@ half-written state and a crashed writer leaves garbage that the next
 scan picks up. This module adds the smallest useful transaction layer —
 the core idea of Delta/Iceberg-style table formats, reduced to what the
 engine needs — and it is the engine's only way to mutate a table:
-appends, merges, deletes, updates and OPTIMIZE all commit through it.
+appends, merges, deletes, updates and OPTIMIZE all commit through it,
+and so does application state that must move with the data (a rollup's
+source watermark, a streaming sketch's batch id ride a commit's
+``meta``).
 
 - data files are immutable parquet files with unique names; they are
   NEVER deleted or modified by a commit, only referenced;
@@ -33,14 +36,30 @@ appends, merges, deletes, updates and OPTIMIZE all commit through it.
   horizon (here: not referenced by ANY retained version); before
   expiring log entries it checkpoints the oldest retained version so
   everything retained stays reconstructable; a checkpoint also records
-  the schema, so enforcement and reads survive the expiry of the
-  entries that logged it;
+  the schema and the version's commit ``meta``, so enforcement, reads
+  and application state survive the expiry of the entries that logged
+  them;
 - reads plan from the schema the log records for the version they
   read, so a snapshot scan starts no parquet footer-inference job
   (tables without a logged schema still infer);
 - ``merge_upsert`` rewrites the whole snapshot anyway, so it writes it
   at ``compact``'s target file size: OPTIMIZE on a merged table finds
   nothing to fold and commits nothing.
+
+The protocol is three primitives:
+
+- ``_snapshot`` is the one log replay: from the nearest checkpoint up
+  to a version, into an immutable record of the live files (in the
+  form the log stores them), their stats, the schema and that
+  version's commit ``meta``. Every reader and every writer starts from
+  one;
+- ``_transact`` is the one optimistic commit loop: a mutation is a
+  ``plan(snapshot) -> (add, remove, schema)`` (``None`` commits
+  nothing), planned again on the winner's snapshot whenever another
+  writer publishes first;
+- ``_rewrite`` is the one copy-on-write of a subset of a snapshot's
+  files, keeping the bucketed layout: compaction, the touched buckets
+  of a bucketed merge, ``delete_where`` and ``update_where`` use it.
 
 Legacy round-2 entries that carry a complete ``files`` list are read
 as implicit checkpoints (state := files), so existing tables upgrade
@@ -54,12 +73,16 @@ unchanged.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 import uuid
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 LOG_DIR = "_log"
 
@@ -83,8 +106,6 @@ def bucket_expr(keys: list[str], num_buckets: int):
     """Deterministic bucket assignment for a merge key: every version
     of a key lands in the same bucket, so a bucketed merge only ever
     rewrites the buckets its batch touches."""
-    from pyspark.sql import functions as F
-
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
 
 
@@ -127,60 +148,115 @@ def _read_entry(table: str, version: int) -> dict:
         return json.load(f)
 
 
-def _reconstruct_with_stats(table: str, version: int) -> tuple[list[str], dict]:
-    """Replay the log up to ``version``: start from the nearest
-    checkpoint at or below it (else empty) and apply each delta in
-    order, carrying per-file stats alongside the live set. Legacy
-    full-``files`` entries reset the state wholesale (no stats).
-    Returns (sorted table-relative paths, {path: stats})."""
-    state: set[str] = set()
-    stats: dict[str, dict] = {}
-    start = 0
-    cps = [c for c in _checkpoint_versions(table) if c <= version]
+class _Snapshot(NamedTuple):
+    """One version of a table as a single log replay sees it.
+    ``files`` are sorted and in stored form: table-relative for files
+    under the table root, absolute for a shallow clone's external
+    references. ``stats`` covers the live files committed with stats,
+    ``meta`` is the version's own commit metadata. ``version`` is None
+    (and every field empty) for a table without commits. Treat the
+    dicts as read-only."""
+
+    table: str
+    version: int | None
+    files: tuple[str, ...]
+    stats: dict
+    schema: dict | None
+    meta: dict
+
+    def paths(self, files=None) -> list[str]:
+        """``files`` (default: the live set) as readable paths."""
+        return [os.path.join(self.table, p) for p in (self.files if files is None else files)]
+
+
+def _snapshot(table: str, version: int | None = None) -> _Snapshot:
+    """Replay the log up to ``version`` (default: the latest) once:
+    start from the nearest checkpoint at or below it (else empty) and
+    apply each delta in order, carrying per-file stats, the newest
+    logged schema (schemas only accumulate, so the newest record is
+    the table schema) and the version's commit ``meta``. A legacy
+    full-``files`` entry resets the live set wholesale (no stats).
+    Raises FileNotFoundError for a version the log does not hold
+    (expired by vacuum, or never committed)."""
+    v = current_version(table) if version is None else version
+    if v is None:
+        return _Snapshot(table, None, (), {}, None, {})
+    cp: dict = {"files": []}
+    cps = [c for c in _checkpoint_versions(table) if c <= v]
     if cps:
-        cp = cps[-1]
-        with open(os.path.join(_log_path(table), f"{cp}.checkpoint.json")) as f:
-            entry = json.load(f)
-        state = set(entry["files"])
-        stats = entry.get("stats", {})
-        start = cp + 1
-    for v in range(start, version + 1):
-        entry = _read_entry(table, v)
-        if "files" in entry:  # legacy snapshot entry = implicit checkpoint
-            state = set(entry["files"])
-            stats = {}
+        with open(os.path.join(_log_path(table), f"{cps[-1]}.checkpoint.json")) as f:
+            cp = json.load(f)
+    live, stats, schema = set(cp["files"]), cp.get("stats", {}), cp.get("schema")
+    try:
+        entries = [_read_entry(table, u) for u in range(cps[-1] + 1 if cps else 0, v + 1)]
+        if entries:
+            meta = entries[-1].get("meta") or {}
+        elif "meta" in cp:  # a checkpoint at ``v`` carries v's meta
+            meta = cp["meta"]
+        else:  # one written before checkpoints did: read the entry
+            meta = _read_entry(table, v).get("meta") or {}
+    except FileNotFoundError:
+        raise FileNotFoundError(f"version {v} of {table!r} does not exist (expired?)") from None
+    for e in entries:
+        if "files" in e:  # legacy snapshot entry = implicit checkpoint
+            live, stats = set(e["files"]), {}
         else:
-            state = (state - set(entry["remove"])) | set(entry["add"])
-            stats.update(entry.get("stats", {}))
-    return sorted(state), {p: stats[p] for p in state if p in stats}
+            live = (live - set(e["remove"])) | set(e["add"])
+            stats.update(e.get("stats", {}))
+        if e.get("schema") is not None:
+            schema = e["schema"]
+    if schema is None and cps:
+        schema = _schema_at_or_below(table, cps[-1])
+    files = tuple(sorted(live))
+    return _Snapshot(table, v, files, {p: stats[p] for p in files if p in stats}, schema, meta)
 
 
-def _reconstruct(table: str, version: int) -> list[str]:
-    return _reconstruct_with_stats(table, version)[0]
+def _schema_at_or_below(table: str, version: int) -> dict | None:
+    """The newest schema that a log entry or checkpoint at or below
+    ``version`` still on disk records: the schema of a table whose
+    checkpoint predates checkpoints recording one."""
+    for v in range(version, -1, -1):
+        for name in (f"{v}.json", f"{v}.checkpoint.json"):
+            try:
+                with open(os.path.join(_log_path(table), name)) as f:
+                    sch = json.load(f).get("schema")
+            except FileNotFoundError:
+                continue
+            if sch is not None:
+                return sch
+    return None
+
+
+def _committed(snap: _Snapshot) -> _Snapshot:
+    """``snap``, or FileNotFoundError for a table without commits."""
+    if snap.version is None:
+        raise FileNotFoundError(f"no committed version in {snap.table!r}")
+    return snap
+
+
+def _latest_schema(table: str, version: int) -> dict | None:
+    """The table's column->type mapping as of ``version``."""
+    return _snapshot(table, version).schema
 
 
 def file_stats(table: str, version: int | None = None) -> dict:
     """Per-file column min/max/rows of a version's live files, straight
     from the manifest (no footer reads). Files committed without stats
     (legacy entries) are absent."""
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table!r}")
-    return _reconstruct_with_stats(table, v)[1]
+    return _committed(_snapshot(table, version)).stats
 
 
 def _write_checkpoint(table: str, version: int) -> None:
     """Materialize the full live set (and its stats) at ``version``
     beside the log. Derived state: written via tmp+rename (idempotent —
     any writer producing it computes identical content), safe to lose."""
-    files, stats = _reconstruct_with_stats(table, version)
-    state = {"version": version, "files": files, "stats": stats}
-    sch = _latest_schema(table, version)
-    if sch is not None:
+    snap = _snapshot(table, version)
+    state = {"version": version, "files": list(snap.files), "stats": snap.stats, "meta": snap.meta}
+    if snap.schema is not None:
         # the schema must outlive the entries that recorded it: after
         # compact + vacuum the newest retained entry is often a
         # schema-less compact entry anchored by this checkpoint
-        state["schema"] = sch
+        state["schema"] = snap.schema
     logd = _log_path(table)
     tmp = os.path.join(logd, f"{version}.{uuid.uuid4().hex[:8]}.cptmp")
     with open(tmp, "w") as f:
@@ -188,52 +264,32 @@ def _write_checkpoint(table: str, version: int) -> None:
     os.replace(tmp, os.path.join(logd, f"{version}.checkpoint.json"))
 
 
-def _stored_path(table: str, p: str) -> str:
-    """Map an absolute file path back to the form the commit log stores
-    it in: table-relative for files under the table root, absolute for
-    external references (shallow clones). The inverse of
-    ``snapshot_files``'s ``os.path.join(table, stored)``."""
-    root = os.path.abspath(table)
-    ap = os.path.abspath(p)
-    if ap == root or ap.startswith(root + os.sep):
-        return os.path.relpath(ap, table)
-    return p
-
-
 def snapshot_files(table: str, version: int | None = None) -> list[str]:
     """The live data files of ``version`` (default: latest committed).
     Absolute paths. Raises FileNotFoundError on an empty table or a
     vacuum-expired version."""
-    v = current_version(table) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table!r}")
-    if not os.path.exists(os.path.join(_log_path(table), f"{v}.json")):
-        raise FileNotFoundError(f"version {v} of {table!r} does not exist (expired?)")
-    return [os.path.join(table, p) for p in _reconstruct(table, v)]
+    return _committed(_snapshot(table, version)).paths()
 
 
-def _read_files(
-    spark: SparkSession, table: str, files: list[str], version: int
-) -> DataFrame:
-    """Scan an explicit file list, per commit dir with that dir as
-    basePath so hive-partition columns (the bucketed-merge layout) are
-    recovered; a commit dir without partition dirs contributes no
-    extra columns.
+def _read_files(spark: SparkSession, snap: _Snapshot, files) -> DataFrame:
+    """Scan ``files`` (stored form) of ``snap``, per commit dir with
+    that dir as basePath so hive-partition columns (the bucketed-merge
+    layout) are recovered; a commit dir without partition dirs
+    contributes no extra columns.
 
-    The scan plans from the schema logged for ``version`` (the version
-    the files belong to): no footer-inference job runs, and the data
-    columns follow the logged order (hive-partition columns last, as
-    Spark places them). A table without a logged schema (legacy
-    entries, raw ``_commit`` callers) falls back to inference, as does
-    a logged schema that does not parse as DDL."""
-    from functools import reduce
-
+    The scan plans from the snapshot's logged schema: no footer-
+    inference job runs, and the data columns follow the logged order
+    (hive-partition columns last, as Spark places them). A table
+    without a logged schema (legacy entries, raw ``_commit`` callers)
+    falls back to inference, as does a logged schema that does not
+    parse as DDL."""
     if not files:
         raise ValueError(
-            f"empty file list for {table!r} — an empty snapshot must be "
-            "handled by the caller (read_table returns a schema-correct "
+            f"empty file list for {snap.table!r} — an empty snapshot must be "
+            "handled by the caller (_read_snapshot returns a schema-correct "
             "empty DataFrame from the commit log)"
         )
+
     def commit_dir(p: str) -> str:
         # nearest data_<id> ancestor — every lakehouse data file lives
         # under one (_stage_data); anchoring basePath there recovers
@@ -248,13 +304,12 @@ def _read_files(
         return anc if os.path.basename(anc).startswith("data_") else os.path.dirname(p)
 
     by_dir: dict[str, list[str]] = {}
-    for p in files:
+    for p in snap.paths(files):
         by_dir.setdefault(commit_dir(p), []).append(p)
     reader = spark.read
-    sch = _latest_schema(table, version)
-    if sch is not None:
+    if snap.schema is not None:
         try:
-            reader = spark.read.schema(_schema_ddl(sch))
+            reader = spark.read.schema(_schema_ddl(snap.schema))
         except ParseException:
             pass  # no DDL spelling (a UDT, a nested name needing quotes)
     parts = [
@@ -274,28 +329,24 @@ def _schema_ddl(sch: dict) -> str:
     )
 
 
-def _empty_snapshot(spark: SparkSession, table: str, version: int | None) -> DataFrame:
-    """A version whose live file set is empty (e.g. delete_where removed
-    every row) still has a schema — reconstruct it from the commit log
-    so readers get an empty DataFrame, not a reduce() crash."""
-    v = current_version(table) if version is None else version
-    sch = None if v is None else _latest_schema(table, v)
-    if not sch:
+def _read_snapshot(spark: SparkSession, snap: _Snapshot) -> DataFrame:
+    """Scan every live file of ``snap``. A version whose live set is
+    empty (e.g. delete_where removed every row) still has a schema in
+    the log, so it reads as an empty DataFrame, not a reduce() crash."""
+    if snap.files:
+        return _read_files(spark, snap, snap.files)
+    if not snap.schema:
         raise FileNotFoundError(
-            f"version {v} of {table!r} has no files and no recorded schema"
+            f"version {snap.version} of {snap.table!r} has no files and no recorded schema"
         )
-    return spark.createDataFrame([], _schema_ddl(sch))
+    return spark.createDataFrame([], _schema_ddl(snap.schema))
 
 
 def read_table(spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
     """Snapshot read: resolve the version's exact file list, then scan
     only those files. Time travel via ``version``. A version with an
     empty live set reads as an empty DataFrame with the logged schema."""
-    v = current_version(table) if version is None else version
-    files = snapshot_files(table, v)
-    if not files:
-        return _empty_snapshot(spark, table, v)
-    return _read_files(spark, table, files, v)
+    return _read_snapshot(spark, _committed(_snapshot(table, version)))
 
 
 def version_asof(table: str, ts: float) -> int:
@@ -331,17 +382,16 @@ def read_table_asof(spark: SparkSession, table: str, ts: float) -> DataFrame:
     return read_table(spark, table, version=version_asof(table, ts))
 
 
-def _range_candidates(table: str, base: int, col: str, lo, hi) -> list[str]:
-    """The live files of version ``base`` that can hold a row with
+def _range_candidates(snap: _Snapshot, col: str, lo, hi) -> list[str]:
+    """The live files of ``snap`` that can hold a row with
     ``lo <= col <= hi``, judged from the manifest alone (no footer is
     opened): a file whose committed [min, max] for ``col`` misses
     [lo, hi], or that committed zero rows, is skipped. A file without
     committed stats is never skipped, so correctness does not depend
     on stats coverage."""
-    stats = file_stats(table, base)
     keep = []
-    for p in snapshot_files(table, base):
-        st = stats.get(_stored_path(table, p))
+    for p in snap.files:
+        st = snap.stats.get(p)
         if st is not None:
             if st.get("rows") == 0:
                 continue
@@ -372,17 +422,12 @@ def read_table_pruned(
     per-file ranges, the manifest prunes on them, and at 100 TB the
     scan cost follows the predicate's selectivity instead of the
     table size."""
-    from pyspark.sql import functions as F
-
-    v = current_version(table) if version is None else version
-    keep = _range_candidates(table, v, col, lo, hi)
+    snap = _committed(_snapshot(table, version))
+    keep = _range_candidates(snap, col, lo, hi)
     if keep:
-        return _read_files(spark, table, keep, v).filter(F.col(col).between(lo, hi))
+        return _read_files(spark, snap, keep).filter(F.col(col).between(lo, hi))
     # preserve the schema: read nothing via an always-false filter
-    files = snapshot_files(table, v)
-    if not files:
-        return _empty_snapshot(spark, table, v)
-    return _read_files(spark, table, files, v).filter(F.lit(False))
+    return _read_snapshot(spark, snap).filter(F.lit(False))
 
 
 def _stage_data(
@@ -445,27 +490,7 @@ class SchemaConflictError(ValueError):
     """An incoming write's column types conflict with the table's."""
 
 
-def _latest_schema(table: str, version: int) -> dict | None:
-    """The table's column->type mapping as of ``version``: the newest
-    log entry or checkpoint at or below it that recorded a schema
-    (schemas only accumulate, so the newest record is the table
-    schema; a checkpoint records the schema as of its version, so it
-    carries the schema past a vacuum that expires the entries that
-    logged it). Expired entries are skipped."""
-    logd = _log_path(table)
-    for v in range(version, -1, -1):
-        for name in (f"{v}.json", f"{v}.checkpoint.json"):
-            try:
-                with open(os.path.join(logd, name)) as f:
-                    sch = json.load(f).get("schema")
-            except FileNotFoundError:
-                continue
-            if sch is not None:
-                return sch
-    return None
-
-
-def _enforced_schema(table: str, base: int | None, df: DataFrame, reset: bool = False) -> dict:
+def _enforced_schema(snap: _Snapshot, df: DataFrame, reset: bool = False) -> dict:
     """Schema enforcement on write (the table-format contract parquet
     directories lack): shared columns must keep their exact type —
     a conflicting append raises instead of poisoning the table for
@@ -475,17 +500,15 @@ def _enforced_schema(table: str, base: int | None, df: DataFrame, reset: bool = 
     legitimately retype. Returns the merged mapping the commit entry
     records."""
     new = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    if reset or base is None:
-        return new
-    prev = _latest_schema(table, base)
-    if prev is None:
+    prev = snap.schema
+    if reset or prev is None:
         return new
     conflicts = {
         k: (prev[k], new[k]) for k in prev.keys() & new.keys() if prev[k] != new[k]
     }
     if conflicts:
         raise SchemaConflictError(
-            f"type conflicts vs table schema of {table!r}: "
+            f"type conflicts vs table schema of {snap.table!r}: "
             + ", ".join(f"{k}: {a} -> {b}" for k, (a, b) in sorted(conflicts.items()))
         )
     return {**prev, **new}
@@ -565,48 +588,74 @@ def _commit(
     return next_v
 
 
+def _transact(table: str, op: str, plan, meta: dict | None = None) -> int:
+    """The one optimistic commit loop: take the latest snapshot, let
+    ``plan(snapshot)`` return ``(add, remove, schema)`` — or ``None``
+    for a provable no-op, which returns the snapshot's version and
+    commits nothing — and publish it as the next version. A lost
+    publish race plans again on the winner's snapshot, so no writer's
+    commit is ever silently dropped: a merge, compaction, delete or
+    update composes with the winner's rows, an overwrite or restore
+    replaces them."""
+    while True:
+        snap = _snapshot(table)
+        step = plan(snap)
+        if step is None:
+            return snap.version
+        add, remove, schema = step
+        try:
+            return _commit(table, add, op, snap.version, remove=remove, schema=schema, meta=meta)
+        except FileExistsError:
+            continue
+
+
+def _rewrite(spark: SparkSession, snap: _Snapshot, files, fn) -> list[str]:
+    """Copy-on-write of ``files`` (stored form) of ``snap``: scan them,
+    transform the scan with ``fn`` and stage the result as new files,
+    hive-partitioned by ``BUCKET_COL`` whenever the result carries it,
+    so a bucketed table keeps its layout. Returns the staged paths;
+    the commit that removes ``files`` carries every other live file
+    over by reference, its bytes untouched."""
+    df = fn(_read_files(spark, snap, files))
+    part = (BUCKET_COL,) if BUCKET_COL in df.columns else ()
+    return _stage_data(df, snap.table, partition_by=part)
+
+
 def append(df: DataFrame, table: str, meta: dict | None = None) -> int:
     """Transactional append. The commit logs ONLY the new files (an
     add-delta): append cost is independent of table size — the shape
     that matters at 100 TB where the live set is millions of files.
     Returns the committed version."""
-    _enforced_schema(table, current_version(table), df)  # fail fast, pre-write
-    new = _stage_data(df, table)
-    while True:
-        base = current_version(table)
-        sch = _enforced_schema(table, base, df)  # re-check vs the race winner
-        try:
-            return _commit(table, new, "append", base, schema=sch, meta=meta)
-        except FileExistsError:
-            continue  # lost the race: an append composes with any winner
+    new: list[str] = []
+
+    def plan(snap: _Snapshot):
+        # checked before the first write, and again against every race
+        # winner; the data is staged once and composes with any winner
+        sch = _enforced_schema(snap, df)
+        if not new:
+            new.extend(_stage_data(df, table))
+        return new, (), sch
+
+    return _transact(table, "append", plan, meta)
 
 
 def overwrite(df: DataFrame, table: str, meta: dict | None = None) -> int:
     """Transactional full replace (the commit shape a MERGE resolves
     to): the delta removes the previous live set and adds the new
-    files; old files stay on disk for older versions until vacuumed."""
-    while True:
-        base = current_version(table)
-        prev = (
-            [_stored_path(table, p) for p in snapshot_files(table, base)]
-            if base is not None
-            else []
-        )
-        new = _stage_data(df, table)
-        try:
-            return _commit(
-                table, new, "overwrite", base, remove=prev,
-                schema=_enforced_schema(table, base, df, reset=True),
-                meta=meta,
-            )
-        except FileExistsError:
-            continue
+    files; old files stay on disk for older versions until vacuumed.
+    The data is staged once; a lost race only re-reads the live set
+    it replaces."""
+    new = _stage_data(df, table)
+    return _transact(
+        table, "overwrite",
+        lambda snap: (new, snap.files, _enforced_schema(snap, df, reset=True)),
+        meta,
+    )
 
 
 def _latest_per_key(batch_df: DataFrame, keys: list[str], order_col: str) -> DataFrame:
     """Last-writer-wins dedup of a merge batch: one row per key, the
     one with the greatest ``order_col`` (the SURVEY §7.4.2 tie-break)."""
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
     w = W.partitionBy(*keys).orderBy(F.col(order_col).desc())
@@ -636,44 +685,31 @@ def merge_upsert(
     files, the layout ``compact`` would produce, so a merged table
     needs no OPTIMIZE; the bytes are those of the replaced snapshot's
     files plus Catalyst's estimate of the batch."""
-    import math
-
     from martian_moments_spark.operators.parallelize import _est_bytes
 
-    while True:
-        base = current_version(table)
+    def plan(snap: _Snapshot):
         batch = _latest_per_key(batch_df, keys, order_col)
-        files = [] if base is None else snapshot_files(table, base)
-        if base is not None:
-            target = (
-                _read_files(spark, table, files, base)
-                if files
-                else _empty_snapshot(spark, table, base)
-            )
+        merged = batch
+        if snap.version is not None:
             # the raw batch has the deduplicated batch's key set; anti-
             # joining on it keeps a second row_number window (and its
             # shuffle) out of the plan
-            survivors = target.join(batch_df.select(*keys), keys, "left_anti")
+            survivors = _read_snapshot(spark, snap).join(batch_df.select(*keys), keys, "left_anti")
             merged = batch.unionByName(survivors)
-        else:
-            merged = batch
         # the merge rewrites the whole snapshot, so it writes at
         # compaction size and OPTIMIZE finds nothing to fold. The
         # batch's Catalyst estimate joins the replaced bytes so a large
         # batch is never squeezed into too few writers; a batch without
         # an estimate (an RDD-backed one reports Long.MaxValue) keeps
         # the plan's own partitioning.
-        out_bytes = sum(os.path.getsize(p) for p in files) + _est_bytes(batch_df)
+        out_bytes = sum(os.path.getsize(p) for p in snap.paths()) + _est_bytes(batch_df)
         n_files = max(1, math.ceil(out_bytes / TARGET_FILE_BYTES))
         if n_files < 1 << 31:
             merged = merged.coalesce(n_files)
-        sch = _enforced_schema(table, base, batch)
-        new = _stage_data(merged, table)
-        prev = [_stored_path(table, p) for p in files]
-        try:
-            return _commit(table, new, "merge", base, remove=prev, schema=sch)
-        except FileExistsError:
-            continue
+        sch = _enforced_schema(snap, batch)
+        return _stage_data(merged, table), snap.files, sch
+
+    return _transact(table, "merge", plan)
 
 
 def upsert_sink(
@@ -733,60 +769,42 @@ def merge_upsert_bucketed(
 
     ``merge_upsert`` rewrites the full snapshot per batch; this writes
     O(touched/num_buckets) of the table per batch and commits once."""
-    while True:
-        base = current_version(table)
+
+    def plan(snap: _Snapshot):
         batch = _latest_per_key(batch_df, keys, order_col).withColumn(
             BUCKET_COL, bucket_expr(keys, num_buckets)
         )
-        if base is None:
-            new = _stage_data(batch, table, partition_by=(BUCKET_COL,))
-            try:
-                return _commit(
-                    table, new, "merge_bucketed", None,
-                    schema=_enforced_schema(table, None, batch),
-                )
-            except FileExistsError:
-                continue
-        touched = {r[0] for r in batch.select(BUCKET_COL).distinct().collect()}
-        files = [_stored_path(table, p) for p in snapshot_files(table, base)]
-        if any(_bucket_of(f, BUCKET_COL) is None for f in files):
-            # a non-bucketed commit is mixed in: its files may hold any
-            # key, so bucket pruning is unsound — fall back to a full
-            # merge (correct, just not partition-scoped) which also
-            # migrates the table to the bucketed layout.
-            touched_files, untouched_files = files, []
-        else:
-            touched_files = [f for f in files if _bucket_of(f, BUCKET_COL) in touched]
-            untouched_files = [f for f in files if _bucket_of(f, BUCKET_COL) not in touched]
-        if touched_files:
-            # _read_files anchors basePath at each file's own data_
-            # commit dir — correct for this table's files AND for a
-            # shallow clone's absolute external references.
-            target = _read_files(
-                spark, table, [os.path.join(table, f) for f in touched_files], base
-            )
+        sch = _enforced_schema(snap, batch)
+        files = []
+        if snap.version is not None:
+            touched = {r[0] for r in batch.select(BUCKET_COL).distinct().collect()}
+            if any(_bucket_of(f, BUCKET_COL) is None for f in snap.files):
+                # a non-bucketed commit is mixed in: its files may hold
+                # any key, so bucket pruning is unsound — fall back to a
+                # full merge (correct, just not partition-scoped) which
+                # also migrates the table to the bucketed layout.
+                files = list(snap.files)
+            else:
+                files = [f for f in snap.files if _bucket_of(f, BUCKET_COL) in touched]
+        if not files:
+            return _stage_data(batch, table, partition_by=(BUCKET_COL,)), files, sch
+
+        def merged_with(target: DataFrame) -> DataFrame:
             # (re)derive the bucket deterministically from the keys:
             # uniform whether the source commit was bucketed or not
             # (the mixed-layout fallback reads unbucketed files).
             if BUCKET_COL in target.columns:
                 target = target.drop(BUCKET_COL)
             target = target.withColumn(BUCKET_COL, bucket_expr(keys, num_buckets))
-            survivors = target.join(batch_df.select(*keys), keys, "left_anti")
-            merged = batch.unionByName(survivors)
-        else:
-            merged = batch
-        sch = _enforced_schema(table, base, batch)
-        new = _stage_data(merged, table, partition_by=(BUCKET_COL,))
-        try:
-            # delta commit: only the touched buckets' files are removed
-            # and only their replacements added — the untouched buckets
-            # carry over implicitly, so the LOG ENTRY (not just the
-            # data write) is O(touched), matching the write amplification.
-            return _commit(
-                table, new, "merge_bucketed", base, remove=touched_files, schema=sch
-            )
-        except FileExistsError:
-            continue
+            return batch.unionByName(target.join(batch_df.select(*keys), keys, "left_anti"))
+
+        # delta commit: only the touched buckets' files are removed and
+        # only their replacements added — the untouched buckets carry
+        # over implicitly, so the LOG ENTRY (not just the data write)
+        # is O(touched), matching the write amplification.
+        return _rewrite(spark, snap, files, merged_with), files, sch
+
+    return _transact(table, "merge_bucketed", plan)
 
 
 def compact(
@@ -809,31 +827,37 @@ def compact(
     threshold, never the whole table. Returns the new version, or the
     current one without committing when the selected files are already
     no more than the target count (as a merge's output normally is)."""
-    import math
 
-    while True:
-        base = current_version(table)
-        files = snapshot_files(table, base)
-        if buckets is not None:
-            chosen = set(buckets)
-            files = [
-                p
-                for p in files
-                if _bucket_of(_stored_path(table, p), BUCKET_COL) in chosen
-            ]
-        total = sum(os.path.getsize(p) for p in files)
+    chosen = None if buckets is None else set(buckets)
+
+    def plan(snap: _Snapshot):
+        files = _committed(snap).files
+        if chosen is not None:
+            files = [f for f in files if _bucket_of(f, BUCKET_COL) in chosen]
+        total = sum(os.path.getsize(p) for p in snap.paths(files))
         n_files = max(1, math.ceil(total / target_bytes))
         if len(files) <= n_files:
-            return base  # nothing to fold; no commit
-        df = _read_files(spark, table, files, base).coalesce(n_files)
-        # a bucketed-merge table keeps its layout through compaction
-        part = (BUCKET_COL,) if BUCKET_COL in df.columns else ()
-        new = _stage_data(df, table, partition_by=part)
-        prev = [_stored_path(table, p) for p in files]
-        try:
-            return _commit(table, new, "compact", base, remove=prev)
-        except FileExistsError:
-            continue
+            return None  # nothing to fold; no commit
+        return _rewrite(spark, snap, files, lambda df: df.coalesce(n_files)), files, None
+
+    return _transact(table, "compact", plan)
+
+
+def _rewrite_where(spark: SparkSession, table: str, op: str, col: str, lo, hi, fn) -> int:
+    """Row-level copy-on-write over ``lo <= col <= hi``: the manifest's
+    per-file [min, max] for ``col`` selects the candidate files that
+    can hold a matching row, and only those are read, transformed by
+    ``fn`` and restaged (``_rewrite``). Returns the new version, or the
+    current one when no file can match — a provable no-op commits
+    nothing."""
+
+    def plan(snap: _Snapshot):
+        candidates = _range_candidates(_committed(snap), col, lo, hi)
+        if not candidates:
+            return None
+        return _rewrite(spark, snap, candidates, fn), candidates, None
+
+    return _transact(table, op, plan)
 
 
 def delete_where(
@@ -844,13 +868,11 @@ def delete_where(
     hi,
 ) -> int:
     """Transactional row-level DELETE (``DELETE WHERE col BETWEEN lo
-    AND hi``) by copy-on-write: the manifest's per-file [min, max] for
-    ``col`` selects the candidate files that can possibly hold a
-    matching row; only those are read, filtered to their surviving
-    rows, and restaged — every other file carries over by reference in
-    the delta commit, its bytes untouched. Readers hold the old
-    snapshot until the single commit lands; time travel to the
-    pre-delete version still sees the deleted rows until vacuum.
+    AND hi``) by copy-on-write: the candidate files are read, filtered
+    to their surviving rows, and restaged — every other file carries
+    over by reference in the delta commit, its bytes untouched. Readers
+    hold the old snapshot until the single commit lands; time travel
+    to the pre-delete version still sees the deleted rows until vacuum.
 
     Write amplification is O(files whose range intersects the
     predicate), which after zorder_write clustering tracks the
@@ -864,25 +886,9 @@ def delete_where(
 
     Returns the new version (or the current one when no file can
     match — a provable no-op commits nothing)."""
-    from pyspark.sql import functions as F
-
-    while True:
-        base = current_version(table)
-        if base is None:
-            raise FileNotFoundError(f"no committed version in {table!r}")
-        candidates = _range_candidates(table, base, col, lo, hi)
-        if not candidates:
-            return base
-        survivors = _read_files(spark, table, candidates, base).filter(
-            ~F.col(col).between(lo, hi)
-        )
-        part = (BUCKET_COL,) if BUCKET_COL in survivors.columns else ()
-        new = _stage_data(survivors, table, partition_by=part)
-        prev = [_stored_path(table, p) for p in candidates]
-        try:
-            return _commit(table, new, "delete", base, remove=prev)
-        except FileExistsError:
-            continue
+    return _rewrite_where(
+        spark, table, "delete", col, lo, hi, lambda df: df.filter(~F.col(col).between(lo, hi))
+    )
 
 
 def update_where(
@@ -895,8 +901,7 @@ def update_where(
 ) -> int:
     """Transactional row-level UPDATE (``UPDATE SET c = expr WHERE col
     BETWEEN lo AND hi``), same copy-on-write shape as
-    ``delete_where``: manifest stats select the files that can hold a
-    matching row, only those are read and restaged with
+    ``delete_where``: the candidate files are read and restaged with
     ``assignments`` (column name -> Column expression) applied to the
     matching rows, everything else carries over by reference in the
     delta commit. Readers flip atomically from the old snapshot to the
@@ -906,26 +911,14 @@ def update_where(
     clustering, the cost of a backfill/correction pass follows the
     predicate, not the table size. Returns the new version (current
     version when no file can match)."""
-    from pyspark.sql import functions as F
+    matched = F.col(col).between(lo, hi)
 
-    while True:
-        base = current_version(table)
-        if base is None:
-            raise FileNotFoundError(f"no committed version in {table!r}")
-        candidates = _range_candidates(table, base, col, lo, hi)
-        if not candidates:
-            return base
-        matched = F.col(col).between(lo, hi)
-        df = _read_files(spark, table, candidates, base)
+    def assign(df: DataFrame) -> DataFrame:
         for name, expr in assignments.items():
             df = df.withColumn(name, F.when(matched, expr).otherwise(F.col(name)))
-        part = (BUCKET_COL,) if BUCKET_COL in df.columns else ()
-        new = _stage_data(df, table, partition_by=part)
-        prev = [_stored_path(table, p) for p in candidates]
-        try:
-            return _commit(table, new, "update", base, remove=prev)
-        except FileExistsError:
-            continue
+        return df
+
+    return _rewrite_where(spark, table, "update", col, lo, hi, assign)
 
 
 def vacuum(
@@ -943,14 +936,12 @@ def vacuum(
     is checkpointed so every retained version remains reconstructable
     without the expired deltas; checkpoints older than the horizon are
     dropped with them. Returns deleted paths."""
-    import time
-
     vs = _versions(table)
     retained = vs[-keep_versions:] if keep_versions > 0 else []
     mtime_horizon = time.time() - retention_seconds
     live: set[str] = set()
     for v in retained:
-        live.update(_stored_path(table, p) for p in snapshot_files(table, v))
+        live.update(_snapshot(table, v).files)
     deleted = []
     for dirpath, _dirs, files in os.walk(table):
         if os.path.basename(dirpath) == LOG_DIR:
@@ -999,8 +990,6 @@ def diff_versions(
     the join co-locates, and because commits are deltas a smarter
     implementation could diff only files the log says changed; this
     row-level form is the semantics those optimizations must match."""
-    from pyspark.sql import functions as F
-
     old = read_table(spark, table, v_old)
     new = read_table(spark, table, v_new)
     val_cols = [c for c in old.columns if c not in keys]
@@ -1062,19 +1051,13 @@ def restore_table(table: str, version: int) -> int:
     the restored-from state stays time-travelable and vacuum keeps
     honoring retention). Optimistic-retry like every writer. Returns
     the new version."""
-    target = set(_stored_path(table, p) for p in snapshot_files(table, version))
-    sch = _latest_schema(table, version)
-    while True:
-        base = current_version(table)
-        if base is None:
-            raise FileNotFoundError(f"no committed version in {table!r}")
-        current = set(_stored_path(table, p) for p in snapshot_files(table, base))
-        add = sorted(target - current)
-        remove = sorted(current - target)
-        try:
-            return _commit(table, add, "restore", base, remove=remove, schema=sch)
-        except FileExistsError:
-            continue
+    target = _committed(_snapshot(table, version))
+
+    def plan(snap: _Snapshot):
+        current, wanted = set(_committed(snap).files), set(target.files)
+        return sorted(wanted - current), sorted(current - wanted), target.schema
+
+    return _transact(table, "restore", plan)
 
 
 def clone_table(src_table: str, dst_table: str, version: int | None = None) -> int:
@@ -1094,31 +1077,24 @@ def clone_table(src_table: str, dst_table: str, version: int | None = None) -> i
 
     Returns the clone's version (0)."""
     src = os.path.abspath(src_table)
-    # pin the version FIRST so the file list, schema, and recorded
-    # cloned_version all describe the same snapshot even while the
+    # one snapshot: the file list, stats, schema and recorded
+    # cloned_version all describe the same version even while the
     # source keeps committing concurrently
-    v = current_version(src) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {src!r}")
-    files = snapshot_files(src, v)  # absolute paths
-    sch = _latest_schema(src, v)
+    snap = _committed(_snapshot(src, version))
     os.makedirs(dst_table, exist_ok=True)
     if _versions(dst_table):
         raise FileExistsError(f"{dst_table!r} already has commits — not cloning over it")
     # zero-copy includes the STATS: remap the source manifest's
     # per-file min/max to the clone's stored keys instead of re-opening
-    # every referenced footer (_collect_stats would read O(files))
-    abs_add = sorted(os.path.abspath(p) for p in files)
-    stats = {
-        os.path.abspath(os.path.join(src, rel)): st
-        for rel, st in file_stats(src, v).items()
-    }  # os.path.join passes absolute keys (clone-of-clone) through
+    # every referenced footer (_collect_stats would read O(files));
+    # os.path.join passes absolute keys (clone-of-clone) through
+    stats = {os.path.abspath(os.path.join(src, p)): st for p, st in snap.stats.items()}
     return _commit(
         dst_table,
-        abs_add,
+        sorted(os.path.abspath(p) for p in snap.paths()),
         "clone",
         None,
-        schema=sch,
-        meta={"cloned_from": src, "cloned_version": v},
+        schema=snap.schema,
+        meta={"cloned_from": src, "cloned_version": snap.version},
         precomputed_stats=stats,
     )

@@ -171,8 +171,8 @@ def _topk_stable(neg, kk1: int):
     import numpy as np
 
     n, m = neg.shape
-    if kk1 >= m:
-        return np.argsort(neg, axis=1, kind="stable")
+    if not 0 < kk1 < m:
+        return np.argsort(neg, axis=1, kind="stable")[:, :kk1]
     kth = np.partition(neg, kk1 - 1, axis=1)[:, kk1 - 1 : kk1]
     mask = ~(neg > kth)
     out = np.empty((n, kk1), dtype=np.int64)
@@ -212,7 +212,7 @@ def _norms(u):
     return np.sqrt(np.einsum("ij,ij->i", u, u).astype(np.float64))
 
 
-def _cosine_topk(qu, cu, k: int, valid=None, take: int | None = None):
+def _cosine_topk(qu, cu, k: int, valid=None):
     """Exact top-``k`` cosine neighbours of every query row of ``qu``
     among the candidate rows of ``cu`` (int64 unit matrices; candidate
     rows in ascending id order): the one local kernel behind every
@@ -223,14 +223,15 @@ def _cosine_topk(qu, cu, k: int, valid=None, take: int | None = None):
     integer Gram block (``_gram_f64``): the ``cosine_fixed`` float
     discipline, one division, so the DuckDB oracles replay it bit for
     bit. ``valid = (qkey, ckey)`` excludes every pair whose keys are
-    EQUAL (self, same label, non-candidate): their cosines are masked
-    to -inf before selection and dropped after it. Per row, selection
-    is the first ``take`` (default ``k + 1``) entries of the stable
-    descending order (``_topk_stable``: ties to the lower column, i.e.
-    the lower id; NaN from a zero-norm vector last), keeping the valid
-    ones up to ``k``. The spare slot is the positional self-exclusion
-    (ADVICE r09): NaN sorts after -inf, so a masked self can still sit
-    inside the first ``k`` on zero-norm input.
+    EQUAL (self, same label, non-candidate). Per row, selection is the
+    first ``k`` entries of the stable descending order
+    (``_topk_stable``: ties to the lower column, i.e. the lower id),
+    in which the NaN cosines of a zero-norm vector rank after every
+    number and the excluded pairs after every valid pair, NaN
+    included; excluded pairs that fill a row with fewer than ``k``
+    valid ones are dropped after selection. A zero-norm query thus
+    still emits its valid candidates, with NULL cosines, as the SQL
+    replays (``ORDER BY cosine DESC NULLS LAST, id``) do.
 
     Memory shape: queries stream in 512-row chunks against all
     candidates, so the largest temporary is (512, m), recycled by the
@@ -238,7 +239,6 @@ def _cosine_topk(qu, cu, k: int, valid=None, take: int | None = None):
     ``(row, col, cosine, rank)`` arrays, row-major, rank ascending."""
     import numpy as np
 
-    take = k + 1 if take is None else take
     qn = _norms(qu)
     cn = qn if cu is qu else _norms(cu)
     parts = []
@@ -249,12 +249,13 @@ def _cosine_topk(qu, cu, k: int, valid=None, take: int | None = None):
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = g / np.outer(qn[s:e], cn)
         if valid is None:
-            top = _topk_stable(-cos, take)
-            hit = np.ones(top.shape, dtype=bool)
+            ok = np.ones(cos.shape, dtype=bool)
         else:
             ok = valid[0][s:e, None] != valid[1][None, :]
-            top = _topk_stable(-np.where(ok, cos, -np.inf), take)
-            hit = np.take_along_axis(ok, top, axis=1)
+        # ascending key: -cosine, then NaN cosines (inf), then excluded
+        # pairs (NaN, which numpy sorts last)
+        top = _topk_stable(np.where(ok, np.where(np.isnan(cos), np.inf, -cos), np.nan), k)
+        hit = np.take_along_axis(ok, top, axis=1)
         rank = np.cumsum(hit, axis=1)
         r, t = np.nonzero(hit & (rank <= k))
         c = top[r, t]
@@ -596,10 +597,7 @@ def hard_negatives_cells_pandas(assigned: DataFrame, k: int = 3) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()[order]
         labels = pdf["label"].to_numpy()[order]
         u = _units_matrix(pdf["units"])[order]
-        # take=k, the selection this kernel has always made: every
-        # same-label pair (self included) is masked, so one spare slot
-        # would only change which NaN rows zero-norm input emits
-        r, c, cos, rank = _cosine_topk(u, u, k, (labels, labels), take=k)
+        r, c, cos, rank = _cosine_topk(u, u, k, (labels, labels))
         return pd.DataFrame(
             {
                 "query_id": ids[r],
@@ -808,7 +806,7 @@ def topk_cosine_blocked(
         # qb == cb. Exactly that row set, no more: the final window
         # orders NaN FIRST, so a block that emitted extra NaN rows
         # would change the answer on zero-norm input.
-        r, c, cos, _ = _cosine_topk(_units_np(left[emb_col]), cu, k + 1, take=k + 1)
+        r, c, cos, _ = _cosine_topk(_units_np(left[emb_col]), cu, k + 1)
         other = qi[r] != ci[c]
         return pd.DataFrame(
             {"id_a": qi[r][other], "id_b": ci[c][other], "cosine": cos[other]}

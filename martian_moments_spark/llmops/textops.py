@@ -43,10 +43,6 @@ def distinct_tokens(col: str = "text") -> Column:
     return F.array_distinct(tokens(col))
 
 
-def sql_distinct_tokens(expr: str = "text") -> str:
-    return f"list_distinct({sql_tokens(expr)})"
-
-
 def term_counts(col: str = "text") -> Column:
     """Per-document term frequencies computed INSIDE the row: an array
     of (term, tf) structs, one per distinct token — semantically

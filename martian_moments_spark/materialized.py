@@ -33,7 +33,6 @@ exact, and engine-owned.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -81,36 +80,24 @@ class MaterializedRollup:
             ]
         )
 
-    def _watermark(self) -> int | None:
-        """The source version the rollup currently reflects — read from
-        the rollup's own commit log (it rode the commit, so it can
-        never disagree with the committed data)."""
-        v = lh.current_version(self.rollup_table)
-        if v is None:
-            return None
-        meta = lh._read_entry(self.rollup_table, v).get("meta") or {}
-        return meta.get("source_version")
-
-    def _source_is_append_only_since(self, from_version: int, to_version: int) -> bool:
-        """False on anything that breaks the incremental premise:
-        removals, legacy full-snapshot entries, a backward-moving
-        source (recreated table), or log entries expired by vacuum."""
+    def _appended_since(self, from_version: int, to_version: int) -> list[str] | None:
+        """The files (stored form) the source's commits after
+        ``from_version`` added, or None on anything that breaks the
+        incremental premise: removals, legacy full-snapshot entries, a
+        backward-moving source (recreated table), or log entries
+        expired by vacuum."""
         if to_version < from_version:
-            return False
+            return None
+        added: list[str] = []
         try:
             for v in range(from_version + 1, to_version + 1):
                 entry = lh._read_entry(self.source_table, v)
                 if "files" in entry or entry.get("remove"):
-                    return False
+                    return None
+                added.extend(entry["add"])
         except FileNotFoundError:
-            return False  # vacuum expired the delta trail
-        return True
-
-    def _delta_files(self, from_version: int, to_version: int) -> list[str]:
-        added: list[str] = []
-        for v in range(from_version + 1, to_version + 1):
-            added.extend(lh._read_entry(self.source_table, v).get("add", []))
-        return [os.path.join(self.source_table, p) for p in added]
+            return None  # vacuum expired the delta trail
+        return added
 
     # -- API ----------------------------------------------------------
 
@@ -119,6 +106,11 @@ class MaterializedRollup:
         Incremental when every commit since the watermark was a pure
         append; full recompute otherwise (or on first run). Returns
         {"mode": "noop"|"incremental"|"full", "source_version": v}.
+
+        The watermark is the source version the rollup reflects, read
+        from the ``meta`` of the rollup snapshot the refresh merges
+        onto: it rode that commit, so it can never disagree with the
+        committed data.
 
         No localCheckpoint before the overwrite: lakehouse commits
         never delete data files (only vacuum does, behind a retention
@@ -131,30 +123,25 @@ class MaterializedRollup:
         src_v = lh.current_version(self.source_table)
         if src_v is None:
             raise FileNotFoundError(f"no committed version in {self.source_table!r}")
-        wm = self._watermark()
-        if wm is not None and wm == src_v:
+        rollup = lh._snapshot(self.rollup_table)
+        wm = rollup.meta.get("source_version")
+        if wm == src_v:
             return {"mode": "noop", "source_version": src_v}
 
         meta = {"source_table": self.source_table, "source_version": src_v}
-        incremental = wm is not None and self._source_is_append_only_since(wm, src_v)
-        if incremental:
-            delta_files = self._delta_files(wm, src_v)
-            current = lh.read_table(spark, self.rollup_table)
-            if delta_files:
+        src = lh._snapshot(self.source_table, src_v)
+        added = None if wm is None else self._appended_since(wm, src_v)
+        if added is not None:
+            merged = lh._read_snapshot(spark, rollup)
+            if added:
                 merged = self._merge_partials(
-                    self._aggregate(
-                        lh._read_files(
-                            spark, self.source_table, delta_files, src_v
-                        )
-                    ).unionByName(current)
+                    self._aggregate(lh._read_files(spark, src, added)).unionByName(merged)
                 )
-            else:
-                merged = current
             lh.overwrite(merged, self.rollup_table, meta=meta)
             mode = "incremental"
         else:
-            full = self._aggregate(lh.read_table(spark, self.source_table, src_v))
-            if lh.current_version(self.rollup_table) is None:
+            full = self._aggregate(lh._read_snapshot(spark, src))
+            if rollup.version is None:
                 lh.append(full, self.rollup_table, meta=meta)
             else:
                 lh.overwrite(full, self.rollup_table, meta=meta)

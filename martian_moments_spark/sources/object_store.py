@@ -90,15 +90,6 @@ def csv_bronze_load(
     )
 
 
-def list_routed(base_dir: str, route: str) -> list[str]:
-    """The reference's per-prefix listing (fget_object loop) — local FS
-    flavor; on S3 this is a prefix listing."""
-    d = os.path.join(base_dir, f"route={route}")
-    if not os.path.isdir(d):
-        return []
-    return [os.path.join(d, f) for f in sorted(os.listdir(d)) if not f.startswith((".", "_"))]
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,

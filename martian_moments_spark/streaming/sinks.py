@@ -5,14 +5,18 @@ algebraic-sketch sinks.
 keyed upsert sink (E8) is ``lakehouse.upsert_sink``: each micro-batch
 is one commit-log version, and that commit entry is the load-complete
 record the reference publishes to Kafka after every COPY
-(src/utils/snowflake.py:61-65, E9).
+(src/utils/snowflake.py:61-65, E9). The sketch sinks keep their running
+state in a lakehouse table too: one commit per micro-batch, carrying
+the batch id in its ``meta``, so a replayed batch is recognised and
+commits nothing (the idempotent-per-batch sink of Structured
+Streaming's exactly-once design).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from martian_moments_spark import lakehouse
 
 
 def append_parquet_sink(
@@ -47,15 +51,11 @@ def cms_sketch_sink(
     the sketch of everything that streamed through, regardless of
     batch boundaries.
 
-    foreachBatch is at-least-once and this update is additive, so the
-    state is kept in per-batch VERSIONED directories
-    (``batch_<id>/`` + Spark's ``_SUCCESS`` marker) rather than one
-    overwritten file: a replayed batch re-reads the state as of the
-    PREVIOUS batch (never its own partial output — double-count-safe),
-    and a crash mid-write leaves only an incomplete dir that the next
-    attempt rewrites. The grid is at most D*W rows, so rewriting it
-    per batch is a few thousand integers. Read the current grid with
-    ``read_cms_sketch``. Returns the started query."""
+    The state is a lakehouse table at ``sketch_path`` (see
+    ``algebraic_sketch_sink`` for the replay rule); the grid is at most
+    D*W rows, so rewriting it per batch is a few thousand integers.
+    Read the current grid with ``read_cms_sketch``. Returns the started
+    query."""
     from martian_moments_spark.functions.sketches import cms_build, cms_merge
 
     return algebraic_sketch_sink(
@@ -78,7 +78,7 @@ def hist_sketch_sink(
 ):
     """Maintain running per-group quantile histograms over a stream
     (functions/sketches.py hist_*): the incremental-percentile sink.
-    Same versioned-state discipline as the CMS sink; the persisted
+    Same committed-state discipline as the CMS sink; the persisted
     state is at most groups*bins cells. Returns the started query."""
     from martian_moments_spark.functions.sketches import hist_build, hist_merge
 
@@ -103,22 +103,24 @@ def algebraic_sketch_sink(
     state. Sound whenever merge(sketch(A), sketch(B)) ==
     sketch(A ++ B) — the law all the engine's sketches pin in tests.
 
-    State is per-batch versioned dirs (``batch_<id>/`` + ``_SUCCESS``)
-    because foreachBatch is at-least-once and merges are additive: a
-    replayed batch reads the state as of the PREVIOUS batch (never its
-    own partial output), and a torn write leaves only an incomplete
-    dir the retry rewrites. Returns the started query."""
+    The running state is a lakehouse table at ``sketch_path``: each
+    micro-batch commits its merged sketch as one ``overwrite`` whose
+    ``meta`` carries the batch id. foreachBatch is at-least-once and
+    the merge is additive, so a replayed batch whose id the current
+    version already holds commits nothing, and any other batch merges
+    onto the current version — a crash before its commit leaves the
+    previous batch's version current, so the replay merges onto
+    exactly that. Superseded versions are ordinary table history,
+    reclaimed by ``lakehouse.vacuum``. Returns the started query."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_sketch = build_fn(batch_df)
-        prev_dir = _latest_cms_dir(sketch_path, before=batch_id)
-        if prev_dir is not None:
-            merged = merge_fn(spark.read.parquet(prev_dir), batch_sketch)
-        else:
-            merged = batch_sketch
-        out_dir = os.path.join(sketch_path, f"batch_{batch_id:020d}")
-        merged.coalesce(1).write.mode("overwrite").parquet(out_dir)
+        snap = lakehouse._snapshot(sketch_path)
+        if snap.meta.get("batch_id") == batch_id:
+            return  # a replay of the batch the table already holds
+        sketch = build_fn(batch_df)
+        if snap.version is not None:
+            sketch = merge_fn(lakehouse._read_snapshot(batch_df.sparkSession, snap), sketch)
+        lakehouse.overwrite(sketch.coalesce(1), sketch_path, meta={"batch_id": batch_id})
 
     return (
         stream_df.writeStream.foreachBatch(_apply)
@@ -129,32 +131,7 @@ def algebraic_sketch_sink(
     )
 
 
-def _latest_cms_dir(sketch_path: str, before: int | None = None) -> str | None:
-    """Newest COMPLETE (``_SUCCESS``-marked) batch dir, optionally
-    restricted to batch ids strictly below ``before`` (the replay
-    case: a batch must never read its own prior partial output)."""
-    if not os.path.isdir(sketch_path):
-        return None
-    best = None
-    for name in os.listdir(sketch_path):
-        if not name.startswith("batch_"):
-            continue
-        try:
-            bid = int(name.split("_", 1)[1])
-        except ValueError:
-            continue
-        if before is not None and bid >= before:
-            continue
-        if not os.path.exists(os.path.join(sketch_path, name, "_SUCCESS")):
-            continue
-        if best is None or bid > best[0]:
-            best = (bid, name)
-    return os.path.join(sketch_path, best[1]) if best else None
-
-
 def read_cms_sketch(spark, sketch_path: str) -> DataFrame:
-    """The current cumulative sketch (latest complete batch version)."""
-    d = _latest_cms_dir(sketch_path)
-    if d is None:
-        raise FileNotFoundError(f"no complete CMS sketch under {sketch_path}")
-    return spark.read.parquet(d)
+    """The current cumulative sketch: the latest version of the sink's
+    table."""
+    return lakehouse.read_table(spark, sketch_path)

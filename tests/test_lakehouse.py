@@ -1110,3 +1110,93 @@ def test_upsert_sink_restarts_exactly_once_on_filesystem_checkpoints(spark, tmp_
     assert sorted(n for n in commits if not n.startswith(".")) == ["0", "1"]
     got = {r["k"]: r["v"] for r in lh.read_table(spark, table).collect()}
     assert got == {1: "a", 2: "b", 3: "b"}
+
+
+_RACE_SCHEMA = "k BIGINT, v STRING, seq BIGINT"
+_RACE_BASE = [(k, "base", 1) for k in range(10)]
+_RACE_WINNER = (100, "winner", 1)
+_RACE_BATCH = [(3, "merged", 2), (60, "merged", 2)]
+_RACE_MERGED = {r for r in _RACE_BASE if r[0] != 3} | {_RACE_WINNER, *_RACE_BATCH}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "overwrite",
+        "merge_upsert",
+        "merge_upsert_bucketed",
+        "compact",
+        "delete_where",
+        "update_where",
+        "restore_table",
+    ],
+)
+def test_every_mutation_replans_after_a_lost_race(spark, tmp_path, monkeypatch, op):
+    """A competing append publishes between a mutation's snapshot read
+    and its commit: the mutation's publish loses, it plans again on the
+    winner's snapshot and lands on the next version. Merge, compaction,
+    delete and update keep the winner's row; overwrite and restore
+    replace it. The overwrite stages its data once."""
+    from pyspark.sql import functions as F
+
+    from martian_moments_spark.lakehouse import BUCKET_COL
+
+    table = str(tmp_path / "t")
+
+    def df(rows):
+        return spark.createDataFrame(rows, _RACE_SCHEMA)
+
+    if op == "merge_upsert_bucketed":
+        lh.merge_upsert_bucketed(spark, df(_RACE_BASE), table, ["k"], "seq", num_buckets=4)
+    else:  # two commits: files for compact to fold, a version to restore
+        lh.append(df(_RACE_BASE[:5]), table)
+        lh.append(df(_RACE_BASE[5:]), table)
+    kept = set(_RACE_BASE) | {_RACE_WINNER}
+    mutate, want = {
+        "overwrite": (lambda: lh.overwrite(df([(50, "new", 1)]), table), {(50, "new", 1)}),
+        "merge_upsert": (
+            lambda: lh.merge_upsert(spark, df(_RACE_BATCH), table, ["k"], "seq"),
+            _RACE_MERGED,
+        ),
+        "merge_upsert_bucketed": (
+            lambda: lh.merge_upsert_bucketed(
+                spark, df(_RACE_BATCH), table, ["k"], "seq", num_buckets=4
+            ),
+            _RACE_MERGED,
+        ),
+        "compact": (lambda: lh.compact(spark, table, target_bytes=1 << 30), kept),
+        "delete_where": (
+            lambda: lh.delete_where(spark, table, "k", 3, 6),
+            {r for r in kept if not 3 <= r[0] <= 6},
+        ),
+        "update_where": (
+            lambda: lh.update_where(spark, table, "k", 3, 6, {"v": F.lit("upd")}),
+            {(k, "upd" if 3 <= k <= 6 else v, s) for k, v, s in kept},
+        ),
+        "restore_table": (lambda: lh.restore_table(table, 0), set(_RACE_BASE[:5])),
+    }[op]
+
+    base = lh.current_version(table)
+    real_commit, real_stage = lh._commit, lh._stage_data
+    raced, staged = [], []
+
+    def commit(t, add, op_name, base_version, **kwargs):
+        if not raced:  # the competing append publishes first, once
+            raced.append(base_version)
+            lh.append(df([_RACE_WINNER]), table)
+        return real_commit(t, add, op_name, base_version, **kwargs)
+
+    def stage(frame, t, partition_by=()):
+        staged.append(frame)
+        return real_stage(frame, t, partition_by)
+
+    monkeypatch.setattr(lh, "_commit", commit)
+    monkeypatch.setattr(lh, "_stage_data", stage)
+    v = mutate()
+    assert raced == [base]
+    assert v == base + 2 == lh.current_version(table)
+    assert _rows(lh.read_table(spark, table).drop(BUCKET_COL)) == want
+    if op == "overwrite":
+        assert len(staged) == 2  # the overwrite's data and the winner's
+    if op == "compact":
+        assert len(lh.snapshot_files(table)) == 1  # the winner's file folded too

@@ -268,11 +268,11 @@ def test_jpeg_codec_general_ac_path_and_malformed():
 
 def test_chunked_topk_never_emits_self_on_zero_norm_input(spark):
     """ADVICE r09 regression: a zero-norm vector makes NaN cosine
-    columns; NaN sorts AFTER the -inf self marker in argsort, so the
-    chunked kernels could emit self-pairs on degenerate input. The
-    positional take-(k+1)-drop-self fix must keep self out — matching
-    the DuckDB oracle's a.vec_id <> b.vec_id — and leave clean-input
-    results untouched (covered by the bit-identity test above)."""
+    columns, and the chunked kernels once emitted self-pairs on that
+    degenerate input. Excluded pairs (self here) rank after every
+    valid pair, NaN included, so self must stay out — matching the
+    DuckDB oracle's a.vec_id <> b.vec_id — and clean-input results
+    stay untouched (covered by the bit-identity test above)."""
     from martian_moments_spark.llmops.similarity import (
         topk_units_cells_pandas,
         with_units_and_norm,
@@ -296,6 +296,66 @@ def test_chunked_topk_never_emits_self_on_zero_norm_input(spark):
     assert all(r["id_a"] != r["id_b"] for r in got), [
         (r["id_a"], r["id_b"]) for r in got if r["id_a"] == r["id_b"]
     ]
+
+
+def test_zero_norm_query_keeps_its_hard_negatives(spark):
+    """A zero-norm query has only NaN (SQL NULL) cosines and its
+    same-label pairs are excluded; the excluded pairs must rank after
+    the NaN ones, so the query still gets its valid hard negatives:
+    exactly the rows of the DuckDB replay (ORDER BY cosine DESC NULLS
+    LAST, neg_id), two of them with NULL cosine."""
+    import math
+
+    import duckdb
+
+    from martian_moments_spark.llmops.similarity import hard_negatives_cells_pandas
+
+    # one cell: a zero vector and three others with label 0, two with label 1
+    rows = [
+        (1, 0, [0, 0, 0]),
+        (2, 0, [5, 1, 0]),
+        (3, 0, [4, 2, 1]),
+        (4, 0, [1, 5, 2]),
+        (5, 1, [2, 1, 5]),
+        (6, 1, [0, 3, 4]),
+    ]
+    assigned = spark.createDataFrame(
+        rows, "vec_id BIGINT, label INT, units ARRAY<BIGINT>"
+    ).withColumn("cell", F.lit(0))
+    got = sorted(
+        (r["query_id"], r["neg_id"], r["rank"],
+         None if r["cosine"] is None or math.isnan(r["cosine"]) else round(r["cosine"], 12))
+        for r in hard_negatives_cells_pandas(assigned, k=3).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE v (vec_id BIGINT, label INT, units BIGINT[])")
+    con.executemany("INSERT INTO v VALUES (?, ?, ?)", rows)
+    want = sorted(
+        (q, n, rank, None if c is None else round(c, 12))
+        for q, n, rank, c in con.execute(
+            """
+            WITH pairs AS (
+                SELECT a.vec_id AS q, b.vec_id AS n,
+                       CAST(list_sum(list_transform(list_zip(a.units, b.units),
+                            z -> z[1] * z[2])) AS DOUBLE) AS dot,
+                       list_sum(list_transform(a.units, x -> x * x)) AS na,
+                       list_sum(list_transform(b.units, x -> x * x)) AS nb
+                FROM v a JOIN v b ON a.label <> b.label
+            ), scored AS (
+                SELECT q, n, CASE WHEN na = 0 OR nb = 0 THEN NULL
+                                  ELSE dot / (sqrt(na) * sqrt(nb)) END AS cosine
+                FROM pairs
+            )
+            SELECT q, n, rank, cosine FROM (
+                SELECT *, ROW_NUMBER() OVER (
+                    PARTITION BY q ORDER BY cosine DESC NULLS LAST, n) AS rank
+                FROM scored
+            ) WHERE rank <= 3
+            """
+        ).fetchall()
+    )
+    assert [r for r in want if r[0] == 1] == [(1, 5, 1, None), (1, 6, 2, None)]
+    assert got == want
 
 
 def test_blocked_topk_pins_rows_on_zero_norm_input(spark):

@@ -106,3 +106,28 @@ def test_bnlj_bound_audit_rejects_table_scan_broadcast(spark):
     )
     audits = bnlj_bound_audit(explain_str(bad))
     assert audits and not audits[0]["bounded"]
+
+
+def test_driver_collects_match_the_reviewed_list():
+    """Every driver-side .collect()/.toPandas()/.first()/.take() under
+    plans/ and llmops/ is on the reviewed list DRIVER_COLLECTS.txt, and
+    every entry there still exists: a new driver collect fails here
+    until it is reviewed and the list regenerated with
+    ``python tools_plan_audit.py --collects > DRIVER_COLLECTS.txt``.
+    Line numbers may drift; file, enclosing function and method may
+    not."""
+    import re
+    from collections import Counter
+
+    from tools_plan_audit import REVIEWED_COLLECTS, driver_collects
+
+    def calls(lines):
+        return Counter(re.sub(r":\d+ ", " ", line) for line in lines if line.strip())
+
+    with open(REVIEWED_COLLECTS) as f:
+        reviewed = calls(f.read().splitlines())
+    listed = calls(driver_collects())
+    assert listed == reviewed, (
+        f"unreviewed: {sorted((listed - reviewed).elements())}; "
+        f"no longer present: {sorted((reviewed - listed).elements())}"
+    )

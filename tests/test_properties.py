@@ -1659,10 +1659,11 @@ def _ref_cos(a, b):
     return float(dot) / (math.sqrt(float(na)) * math.sqrt(float(nb)))
 
 
-def _ref_topk(qu, cu, k, valid, take):
-    """Per query row: order the candidates by (NaN last, cosine DESC,
-    column) with masked pairs at -inf, take the first ``take``, keep the
-    valid ones, cut at ``k``; (row, col, cosine, rank) tuples."""
+def _ref_topk(qu, cu, k, valid):
+    """Per query row: the valid candidates ordered by (NaN last, cosine
+    DESC, column), cut at ``k``; (row, col, cosine, rank) tuples. A
+    zero-norm query keeps its valid candidates with NaN cosines, as
+    ``ORDER BY cosine DESC NULLS LAST, id`` does in SQL."""
     import math
 
     out = []
@@ -1670,11 +1671,10 @@ def _ref_topk(qu, cu, k, valid, take):
         order = []
         for j in range(len(cu)):
             cs = _ref_cos(qu[i], cu[j])
-            ok = valid is None or valid[0][i] != valid[1][j]
-            v = cs if ok else -math.inf
-            order.append(((math.isnan(v), 0.0 if math.isnan(v) else -v, j), j, ok, cs))
+            if valid is None or valid[0][i] != valid[1][j]:
+                order.append(((math.isnan(cs), 0.0 if math.isnan(cs) else -cs, j), j, cs))
         order.sort()
-        kept = [(j, cs) for _, j, ok, cs in order[:take] if ok][:k]
+        kept = [(j, cs) for _, j, cs in order][:k]
         out += [(i, j, cs, rank) for rank, (j, cs) in enumerate(kept, start=1)]
     return out
 
@@ -1700,17 +1700,16 @@ def _assert_topk(got_arrays, want):
     q=small_units,
     c=small_units,
     k=st.integers(0, 4),
-    spare=st.booleans(),
     mask=st.sampled_from(["none", "self", "id", "label", "cand"]),
     labels=st.lists(st.integers(0, 2), min_size=10, max_size=10),
     tau=st.sampled_from([-1.0, 0.0, 0.5, 0.9, 1.0]),
 )
 @settings(max_examples=200, deadline=None)
-def test_vector_primitives_match_bruteforce(q, c, k, spare, mask, labels, tau):
+def test_vector_primitives_match_bruteforce(q, c, k, mask, labels, tau):
     """The shared exact vector primitives of llmops.similarity against
     plain-Python references on small integer matrices: the cosine top-k
-    (ties to the lower column, NaN rows of all-zero vectors last, masked
-    pairs at -inf before selection and dropped after it, cut at k), the
+    (ties to the lower column, NaN cosines of all-zero vectors after
+    every number, masked pairs never emitted, cut at k), the
     first earlier tau hit, and the nearest-centroid ranking with tied
     distances going to the lower id."""
     import numpy as np
@@ -1735,13 +1734,7 @@ def test_vector_primitives_match_bruteforce(q, c, k, spare, mask, labels, tau):
         "id": (pos * 3, ids),  # some query ids collide with candidate ids
         "cand": (pos * 2 + 1, ids),  # odd query ids never collide
     }[mask]
-    if spare or k == 0:  # the default selection: k + 1
-        got = _cosine_topk(qu, cu, k, valid)
-        take = k + 1
-    else:
-        got = _cosine_topk(qu, cu, k, valid, take=k)
-        take = k
-    _assert_topk(got, _ref_topk(qu, cu, k, valid, take))
+    _assert_topk(_cosine_topk(qu, cu, k, valid), _ref_topk(qu, cu, k, valid))
     assert _first_earlier_hit(qu, tau).tolist() == _ref_first(qu, tau)
 
     # centroids: the candidate rows, some duplicated (tied distances),
@@ -1774,5 +1767,5 @@ def test_vector_primitives_across_chunk_boundaries():
 
     u = np.random.default_rng(5).integers(-2, 3, size=(600, 3))
     pos = np.arange(len(u))
-    _assert_topk(_cosine_topk(u, u, 2, (pos, pos)), _ref_topk(u, u, 2, (pos, pos), 3))
+    _assert_topk(_cosine_topk(u, u, 2, (pos, pos)), _ref_topk(u, u, 2, (pos, pos)))
     assert _first_earlier_hit(u, 0.9).tolist() == _ref_first(u, 0.9)

@@ -122,21 +122,43 @@ def test_cms_estimate_unseen_key_is_zero_not_dropped(spark):
     assert rows["__never_in_any_document__"] == 0
 
 
-def test_latest_cms_dir_picks_complete_and_respects_replay_horizon(tmp_path):
-    from martian_moments_spark.streaming.sinks import _latest_cms_dir
+def test_sketch_sink_replayed_batch_commits_once_and_merges(spark, tmp_path):
+    """foreachBatch is at-least-once: the sink's batch function run
+    twice with the same batch id commits once (the replay finds its id
+    in the table's current commit meta), and the next id merges onto
+    that state, so the grid is the sketch of both batches."""
+    from martian_moments_spark import lakehouse as lh
+    from martian_moments_spark.streaming.sinks import cms_sketch_sink, read_cms_sketch
 
-    base = str(tmp_path / "s")
-    assert _latest_cms_dir(base) is None
-    for bid, complete in [(0, True), (1, True), (2, False)]:
-        d = tmp_path / "s" / f"batch_{bid:020d}"
-        d.mkdir(parents=True)
-        if complete:
-            (d / "_SUCCESS").touch()
-    # incomplete batch 2 (crash mid-write) is invisible
-    assert _latest_cms_dir(base).endswith(f"batch_{1:020d}")
-    # a replay of batch 1 must read state as of batch 0
-    assert _latest_cms_dir(base, before=1).endswith(f"batch_{0:020d}")
-    assert _latest_cms_dir(base, before=0) is None
+    captured = {}
+
+    class Writer:
+        def foreachBatch(self, fn):
+            captured["apply"] = fn
+            return self
+
+        def option(self, *args, **kwargs):
+            return self
+
+        outputMode = trigger = option
+
+        def start(self):
+            return None
+
+    class Stream:
+        writeStream = Writer()
+
+    path = str(tmp_path / "sketch")
+    cms_sketch_sink(Stream(), path, str(tmp_path / "ckpt"), key_col="tok")
+    apply = captured["apply"]
+    b0 = spark.createDataFrame([("a",), ("b",), ("a",)], "tok STRING")
+    b1 = spark.createDataFrame([("b",), ("c",)], "tok STRING")
+    apply(b0, 0)
+    apply(b0, 0)
+    assert lh.current_version(path) == 0
+    apply(b1, 1)
+    assert lh.current_version(path) == 1
+    assert _cells(read_cms_sketch(spark, path)) == _cells(cms_build(b0.unionByName(b1), "tok"))
 
 
 def test_hist_merge_equals_hist_of_union_and_error_bound(spark):

@@ -18,11 +18,23 @@ Checks per query:
 - BatchEvalPython             -> hard flag (row-at-a-time Python UDF)
 
 Run: python tools_plan_audit.py   (~3-4 min; prints one JSON summary line)
+
+``python tools_plan_audit.py --collects`` instead lists every
+driver-side ``.collect()``, ``.toPandas()``, ``.first()`` and ``.take()``
+under ``martian_moments_spark/plans/`` and ``llmops/`` (an AST walk, no
+Spark), one ``file:line  function  .method()`` line each. The reviewed
+list is ``DRIVER_COLLECTS.txt``; ``tests/test_plan_audit.py`` fails on
+any call not on it, so a new driver collect is reviewed before it
+lands. Refresh it after review with
+``python tools_plan_audit.py --collects > DRIVER_COLLECTS.txt``.
 """
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
+import os
 import re
 import sys
 
@@ -91,6 +103,38 @@ BNLJ_ALLOW: dict[str, str] = {
 # global_rank_range_partitioned is the named lift if the shard target
 # is ever raised past one task).
 SP_ALLOW: dict[str, str] = {}
+
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+COLLECT_ROOTS = ("martian_moments_spark/plans", "martian_moments_spark/llmops")
+COLLECT_METHODS = ("collect", "toPandas", "first", "take")
+REVIEWED_COLLECTS = os.path.join(ROOT, "DRIVER_COLLECTS.txt")
+
+
+def driver_collects() -> list[str]:
+    """``file:line  function  .method()`` for every call of a
+    ``COLLECT_METHODS`` attribute under ``COLLECT_ROOTS``, in file and
+    line order; ``function`` is the dotted enclosing def/class path."""
+    out = []
+
+    def visit(node, path: str, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in COLLECT_METHODS
+            ):
+                out.append((path, child.lineno, scope or "<module>", child.func.attr))
+            visit(child, path, inner)
+
+    for root in COLLECT_ROOTS:
+        for f in sorted(glob.glob(os.path.join(ROOT, root, "**", "*.py"), recursive=True)):
+            with open(f) as fh:
+                visit(ast.parse(fh.read(), f), os.path.relpath(f, ROOT), "")
+    return [f"{p}:{line}  {fn}  .{m}()" for p, line, fn, m in sorted(out)]
 
 
 def parse_plan_nodes(plan: str):
@@ -442,4 +486,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:] == ["--collects"]:
+        print("\n".join(driver_collects()))
+    else:
+        main()
